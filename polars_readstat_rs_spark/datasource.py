@@ -33,7 +33,7 @@ Options:
   schemas (survey waves) read as the by-name union of all files'
   fields — missing columns null-fill, type conflicts fail at plan time.
 - ``multifile`` (write, default false): partitioned DIRECTORY sink —
-  each task writes one complete standalone file; see _MultiPartWriter.
+  each task writes one complete standalone file; see _SpoolSink.
 
 At cluster scale each partition is an independent (path, row-range) unit
 -> 1000 executors can share one huge file or many files; compressed
@@ -43,8 +43,12 @@ across files instead.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import os
+import shutil
 from dataclasses import dataclass
+from typing import Callable, NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -201,8 +205,6 @@ def expand_paths(path: str) -> list[str]:
     DataFrame, partitioned per file and within files). Returns sorted
     concrete files; single non-glob files pass through unchecked so a
     missing file still raises the format's own open error."""
-    import glob as _glob
-
     if os.path.isdir(path):
         out = [
             os.path.join(path, f)
@@ -213,7 +215,7 @@ def expand_paths(path: str) -> list[str]:
             raise ValueError(f"directory {path!r} contains no readstat files")
         return sorted(out)
     if any(c in path for c in "*?["):
-        out = sorted(_glob.glob(path))
+        out = sorted(glob.glob(path))
         if not out:
             raise ValueError(f"glob {path!r} matched no files")
         return out
@@ -431,35 +433,22 @@ class ReadstatDataSource(DataSource):
         return _ReadstatStreamReader(dict(self.options))
 
     def writer(self, schema, overwrite: bool):
-        """df.write.format("readstat").save(path): distributed encode
-        (.dta and .sav).
+        """df.write.format("readstat").save(path): distributed two-phase
+        write of .dta, .sav/.zsav, .xpt, .por or .sas7bdat (_SpoolSink).
 
-        Each task vectorized-encodes its partition's Arrow batches to
-        fixed-width record *sections* in a staging dir beside the
-        output path (shared filesystem on a real cluster); commit() on
-        the driver streams the sections into the final file — header +
-        dictionary + re-strided record blobs (+ GSO heap for Stata) —
-        one section at a time, never materializing rows (the reference's
-        streaming-batch write mode, src/stata/writer.rs:244-380, without
-        needing the row count upfront). option("staging_dir", ...)
-        overrides the staging location.
+        Each task encodes its partition's Arrow batches to record
+        sections in a staging dir beside the output path (shared
+        filesystem on a real cluster); commit() on the driver streams
+        the sections into the final file one section at a time, never
+        materializing rows (the reference's streaming-batch write mode,
+        src/stata/writer.rs:244-380, without needing the row count
+        upfront). option("staging_dir", ...) overrides the staging
+        location; option("multifile", "true") writes a directory of
+        standalone part files instead.
         """
-        import json
-
-        fmt = self._fmt()
-        value_labels = json.loads(self.options.get("value_labels", "{}"))
-        variable_labels = json.loads(self.options.get("variable_labels", "{}"))
-        if _true(self.options.get("multifile"), default=False):
-            # option("multifile","true"): the 100 TB WRITE path — each
-            # task writes ONE complete standalone file of the target
-            # format into the output DIRECTORY (no driver-side assembly
-            # at all; commit only renames). The single-file writers above
-            # stream sections through the driver, which is the right
-            # shape for "produce one .dta", but a 100 TB result cannot
-            # be one file — and the read side already scans directories
-            # partition-per-file (expand_paths).
-            return _MultiPartWriter(self.options["path"], schema, fmt, self.options, overwrite)
-        if not overwrite and os.path.exists(self.options["path"]):
+        path = self.options["path"]
+        multifile = _true(self.options.get("multifile"), default=False)
+        if not multifile and not overwrite and os.path.exists(path):
             # single-file stat formats are not appendable containers: a
             # mode("append") here used to silently OVERWRITE the file.
             # Appending to a missing path is just a create and stays
@@ -467,149 +456,21 @@ class ReadstatDataSource(DataSource):
             # sink (each job adds part files) or the streaming sinks.
             raise ValueError(
                 f"cannot append to existing single-file output "
-                f"{self.options['path']!r}: .dta/.sav/.xpt/.por/.sas7bdat are "
+                f"{path!r}: .dta/.sav/.xpt/.por/.sas7bdat are "
                 "not appendable containers — use mode('overwrite'), or "
                 "option('multifile','true') for an appendable directory of "
                 "part files"
             )
-        if fmt == "stata":
-            return _DtaWriter(
-                self.options["path"],
-                schema,
-                value_labels,
-                variable_labels,
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-                version=int(self.options.get("dta_version", "118")),
-            )
-        if fmt == "spss":
-            # a .zsav target implies the zlib container; otherwise the
-            # compress option picks False / bytecode / "zsav" explicitly
-            comp_opt = self.options.get("compress")
-            compress = (
-                "zsav"
-                if self.options["path"].lower().endswith(".zsav")
-                or str(comp_opt).lower() == "zsav"
-                else _true(comp_opt, default=False)
-            )
-            return _SavWriter(
-                self.options["path"],
-                schema,
-                value_labels,
-                variable_labels,
-                data_label=self.options.get("data_label", ""),
-                user_missing=json.loads(self.options.get("user_missing", "{}")),
-                staging_dir=self.options.get("staging_dir"),
-                compress=compress,
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-            )
-        if fmt == "xport":
-            return _XptWriter(
-                self.options["path"],
-                schema,
-                dsname=self.options.get("dsname", "DATA"),
-                dslabel=self.options.get("data_label", ""),
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-                # option("xport_version", "8"): TS140-2 V8 headers with
-                # 32-char long names in LABELV8 (default v5)
-                version=int(self.options.get("xport_version", "5")),
-            )
-        if fmt == "sas":
-            return _BdatWriter(
-                self.options["path"],
-                schema,
-                dsname=self.options.get("dsname", "DATA"),
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-                variable_labels=json.loads(self.options.get("variable_labels", "{}")),
-                # option("compress", "rle"|"rdc"|"true"): SASYZCRL /
-                # SASYZCR2 row compression — pays off on wide/padded
-                # rows (each row also costs a 24-byte subheader pointer);
-                # "true" keeps the pre-r9 RLE behavior
-                compress=(
-                    self.options["compress"].upper()
-                    if str(self.options.get("compress", "")).lower() in ("rle", "rdc")
-                    else _true(self.options.get("compress"), default=False)
-                ),
-                # option("column_formats", '{"col": "FMTNAME"}'): SAS
-                # display formats per column (catalog value-label keys)
-                column_formats=json.loads(self.options.get("column_formats", "{}")),
-            )
-        if fmt == "por":
-            return _PorWriter(
-                self.options["path"],
-                schema,
-                staging_dir=self.options.get("staging_dir"),
-                variable_labels=variable_labels,
-                value_labels=value_labels,
-            )
-        raise ValueError("distributed write supports .dta, .sav, .xpt, .por and .sas7bdat")
+        return _SpoolSink(path, schema, self._fmt(), self.options, overwrite, multifile)
 
     def streamWriter(self, schema, overwrite: bool):
-        """df.writeStream.format("readstat").start(dir): continuous
-        .dta sink — one immutable part-{batchId}.dta per micro-batch in
-        the output directory (readable back by the batch reader and the
-        streaming source). The path is a directory, so the format comes
-        from option("format", ...), defaulting to stata."""
-        import json
-
+        """df.writeStream.format("readstat").start(dir): one immutable
+        part-{batchId}.{ext} per micro-batch in the output directory
+        (readable back by the batch reader and the streaming source).
+        The path is a directory, so the format comes from
+        option("format", ...), defaulting to stata."""
         fmt = self.options.get("format", "stata").lower()
-        if fmt == "stata":
-            return _DtaStreamWriter(
-                self.options["path"],
-                schema,
-                json.loads(self.options.get("value_labels", "{}")),
-                json.loads(self.options.get("variable_labels", "{}")),
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-            )
-        if fmt == "spss":
-            comp_opt = self.options.get("compress")
-            compress = (
-                "zsav"
-                if str(comp_opt).lower() == "zsav"
-                else _true(comp_opt, default=False)
-            )
-            return _SavStreamWriter(
-                self.options["path"],
-                schema,
-                json.loads(self.options.get("value_labels", "{}")),
-                json.loads(self.options.get("variable_labels", "{}")),
-                data_label=self.options.get("data_label", ""),
-                user_missing=json.loads(self.options.get("user_missing", "{}")),
-                staging_dir=self.options.get("staging_dir"),
-                compress=compress,
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-            )
-        if fmt == "xport":
-            return _XptStreamWriter(
-                self.options["path"],
-                schema,
-                dsname=self.options.get("dsname", "DATA"),
-                dslabel=self.options.get("data_label", ""),
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-                version=int(self.options.get("xport_version", "5")),
-            )
-        if fmt == "sas":
-            return _BdatStreamWriter(
-                self.options["path"],
-                schema,
-                dsname=self.options.get("dsname", "DATA"),
-                staging_dir=self.options.get("staging_dir"),
-                string_widths=json.loads(self.options.get("string_widths", "{}")),
-            )
-        if fmt == "por":
-            return _PorStreamWriter(
-                self.options["path"],
-                schema,
-                staging_dir=self.options.get("staging_dir"),
-                variable_labels=json.loads(self.options.get("variable_labels", "{}")),
-                value_labels=json.loads(self.options.get("value_labels", "{}")),
-            )
-        raise ValueError("streaming readstat sink writes .dta, .sav, .xpt, .por or .sas7bdat "
-                         '(option("format", "stata"|"spss"|"xport"|"por"|"sas"))')
+        return _SpoolStreamSink(self.options["path"], schema, fmt, self.options, overwrite)
 
 
 class _StreamFilePartition(InputPartition):
@@ -1129,751 +990,273 @@ class _ReadstatReader(DataSourceReader):
                 done += take
 
 
-class _DtaCommit(WriterCommitMessage):
-    def __init__(self, blob_path: str, sections: list):
-        self.blob_path = blob_path
-        self.sections = sections  # per-batch record-layout metadata dicts
+class _Codec(NamedTuple):
+    """One format's half of a write sink: the part-file extension, the
+    task-side ``spill(batches, blob) -> sections`` and the commit-side
+    ``assemble(target, parts=[(blob, sections), ...])``, both bound to
+    the write's options."""
+
+    ext: str
+    spill: Callable
+    assemble: Callable
 
 
-class _DtaWriter(DataSourceArrowWriter):
-    """Distributed .dta write, record bytes encoded partition-side.
+def _codec(fmt: str, options, schema) -> _Codec:
+    """Parse the write options once for every sink (batch, multifile and
+    stream). Options are strings, so maps and lists come as JSON."""
+    import json
+    from functools import partial
 
-    Executors encode their Arrow batches straight to fixed-width Stata
-    record sections (writer.spill_partition) in a staging dir *next to
-    the output path* — i.e. on the same (shared) filesystem the .dta is
-    going to, so multi-node clusters work (a driver-local tempdir would
-    not exist on executor nodes, nor be readable back). commit() streams
-    the sections through a numpy re-stride into the final layout
-    (writer.assemble_dta): no Arrow tables, no row materialization, one
-    section (~batch_size rows) of driver memory regardless of dataset
-    size — matching the reference's streaming batch-write contract
-    (/root/reference/src/stata/writer.rs:244-380).
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def js(key: str) -> dict:
+        return json.loads(options.get(key, "{}"))
+
+    def value_labels(key_type) -> dict:
+        # option("value_labels", '{"col": {"1": "label"}}')
+        return {c: {key_type(k): v for k, v in m.items()} for c, m in js("value_labels").items()}
+
+    path = options["path"]
+    arrow = to_arrow_schema(schema)
+    # option("string_widths", '{"col": bytes}'): tasks encode declared
+    # columns at their final width, so commit byte-copies sections
+    widths = {k: int(v) for k, v in js("string_widths").items()}
+    variable_labels = js("variable_labels")
+    dsname = options.get("dsname", "DATA")
+    data_label = options.get("data_label", "")
+    comp = str(options.get("compress", "")).lower()
+    column_order = [(f.name, isinstance(f.dataType, T.StringType)) for f in schema.fields]
+    if fmt == "stata":
+        from .formats.stata import writer as w
+
+        return _Codec("dta", partial(w.spill_partition, declared=widths), partial(
+            w.assemble_dta, schema=arrow, value_labels=value_labels(int),
+            variable_labels=variable_labels, declared=widths,
+            # option("dta_version", "117"|"119"): pre-Stata-14 / >32k-variable output
+            version=int(options.get("dta_version", "118")),
+        ))
+    if fmt == "spss":
+        from .formats.spss import writer as w
+
+        # a .zsav target implies the zlib container; otherwise the
+        # compress option picks False / bytecode / "zsav" explicitly
+        compress = "zsav" if path.lower().endswith(".zsav") or comp == "zsav" else _true(comp, False)
+        return _Codec(
+            "zsav" if compress == "zsav" else "sav",
+            partial(w.spill_sav_partition, declared=widths, compress=compress),
+            partial(
+                w.assemble_sav, schema=arrow, value_labels=value_labels(float),
+                variable_labels=variable_labels, data_label=data_label,
+                user_missing={c: [float(x) for x in xs] for c, xs in js("user_missing").items()},
+                compress=compress, declared=widths,
+            ),
+        )
+    if fmt == "xport":
+        from .formats.sas import xport as w
+
+        return _Codec("xpt", partial(w.spill_partition, declared=widths), partial(
+            w.assemble_xpt, dsname=dsname, dslabel=data_label, column_order=column_order,
+            string_widths=widths,
+            # option("xport_version", "8"): TS140-2 V8 headers with
+            # 32-char long names in LABELV8 (default v5)
+            version=int(options.get("xport_version", "5")),
+        ))
+    if fmt == "sas":
+        from .formats.sas import bdat_writer as w
+
+        # option("column_formats", '{"col": "FMTNAME"}'): SAS display
+        # formats per column (catalog value-label keys)
+        spill = partial(w.spill_partition, declared=widths, column_formats=js("column_formats"))
+        return _Codec("sas7bdat", spill, partial(
+            w.assemble_sas7bdat, dsname=dsname, column_order=column_order,
+            string_widths=widths, variable_labels=variable_labels,
+            # option("compress", "rle"|"rdc"|"true"): SASYZCRL / SASYZCR2
+            # row compression ("true" is RLE)
+            compress=comp.upper() if comp in ("rle", "rdc") else _true(comp, False),
+        ))
+    if fmt == "por":
+        from .formats.spss import portable as w
+
+        return _Codec("por", w.spill_partition, partial(
+            w.assemble_partitions, schema=arrow, variable_labels=variable_labels,
+            value_labels=js("value_labels"),
+        ))
+    raise ValueError(
+        f"readstat writes .dta, .sav, .xpt, .por or .sas7bdat, not {fmt!r} "
+        '(option("format", "stata"|"spss"|"xport"|"por"|"sas"))'
+    )
+
+
+class _SpoolCommit(WriterCommitMessage):
+    """A task's output: its spilled blob and section metadata, or (for
+    a multifile write) the part file it assembled, still under its
+    temp name."""
+
+    def __init__(self, path: str = "", sections: list | None = None):
+        self.path = path
+        self.sections = sections or []
+
+
+def _temp_name(target: str) -> str:
+    """The dot-temp name a file is assembled under before its rename;
+    directory reads skip it (its extension is not a stat format)."""
+    d, base = os.path.split(target)
+    return os.path.join(d, f".{base}.tmp_")
+
+
+class _SpoolSink(DataSourceArrowWriter):
+    """The write sink of every format: tasks spill, publishers assemble.
+
+    Each task spills its Arrow batches through the format's _Codec to a
+    blob in a staging dir *beside the output path*, i.e. on the same
+    (shared) filesystem the output goes to, so multi-node clusters work
+    (option("staging_dir") overrides it). Every publish assembles under
+    a dot-temp name beside its target and then renames it into place,
+    so readers never list a half-written file and a failed commit
+    leaves the previous output intact:
+
+    - single file (default): commit() streams every task's sections
+      into ``path``, one section (~batch_size rows) of driver memory
+      regardless of dataset size.
+    - multifile (option("multifile","true")), the 100 TB write shape:
+      each task assembles its own standalone part-{partitionId}-{uuid}
+      file in the output DIRECTORY, holding one section at a time, and
+      commit() only renames exactly the committed set; task retries
+      leave unreferenced temps, which abort() removes. The read side
+      plans one partition per file, so write->read round-trips at any
+      file count.
     """
 
-    def __init__(self, path: str, schema, value_labels=None, variable_labels=None,
-                 staging_dir: str | None = None, string_widths=None, version: int = 118):
+    def __init__(self, path: str, schema, fmt: str, options, overwrite: bool,
+                 multifile: bool = False):
+        self.path = path
+        self.codec = _codec(fmt, options, schema)
+        self.overwrite = overwrite
+        self.multifile = multifile
+        parent = options.get("staging_dir") or os.path.dirname(os.path.abspath(path)) or "."
+        self.stage_dir = os.path.join(
+            parent, f".{os.path.basename(path)}._stage_{self._stage_key()}"
+        )
+        if multifile:
+            os.makedirs(path, exist_ok=True)
+
+    def _stage_key(self) -> str:
         import uuid
 
-        self.path = path
-        self.schema = schema
-        # option("dta_version", "117"): pre-Stata-14 output (no strL)
-        self.version = version
-        # option("string_widths", '{"col": bytes}'): sections encode at
-        # the declared width, so commit()'s fast path byte-copies them
-        self.string_widths = {k: int(v) for k, v in (string_widths or {}).items()}
-        # option("value_labels", '{"col": {"1": "label"}}') — JSON because
-        # DataSource options are strings; keys are parsed back to ints.
-        self.value_labels = {
-            col: {int(k): v for k, v in m.items()} for col, m in (value_labels or {}).items()
-        }
-        self.variable_labels = variable_labels or {}
-        parent = staging_dir or (os.path.dirname(os.path.abspath(path)) or ".")
-        self.stage_dir = os.path.join(
-            parent, f".{os.path.basename(path)}._stage_{uuid.uuid4().hex}"
-        )
+        return uuid.uuid4().hex
 
     def write(self, batches):
         import uuid
 
-        from .formats.stata.writer import spill_partition
-
         os.makedirs(self.stage_dir, exist_ok=True)
         blob = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.bin")
-        sections = spill_partition(batches, blob, declared=self.string_widths)
+        sections = self.codec.spill(batches, blob)
         if not sections:
             os.unlink(blob)
-            return _DtaCommit("", [])
-        return _DtaCommit(blob, sections)
+            return _SpoolCommit()
+        if not self.multifile:
+            return _SpoolCommit(blob, sections)
+        from pyspark import TaskContext
 
-    def commit(self, messages):
-        import shutil
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .formats.stata.writer import assemble_dta
-
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_dta(
-            self.path,
-            to_arrow_schema(self.schema),
-            parts,
-            value_labels=self.value_labels,
-            variable_labels=self.variable_labels,
-            declared=self.string_widths,
-            version=self.version,
-        )
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-
-class _XptWriter(DataSourceArrowWriter):
-    """Distributed .xpt write: executors encode Arrow batches to
-    fixed-width XPORT record sections (formats.sas.xport.spill_partition)
-    in a staging dir beside the output path; commit() streams the
-    sections into the final transport file, re-striding char columns to
-    the global width (one section of driver memory at a time)."""
-
-    def __init__(self, path: str, schema, dsname: str = "DATA", dslabel: str = "",
-                 staging_dir: str | None = None, string_widths=None, version: int = 5):
-        import uuid
-
-        self.path = path
-        self.schema = schema
-        self.dsname = dsname
-        self.dslabel = dslabel
-        self.version = version
-        self.string_widths = {k: int(v) for k, v in (string_widths or {}).items()}
-        parent = staging_dir or (os.path.dirname(os.path.abspath(path)) or ".")
-        self.stage_dir = os.path.join(
-            parent, f".{os.path.basename(path)}._stage_{uuid.uuid4().hex}"
-        )
-
-    def write(self, batches):
-        import uuid
-
-        from .formats.sas.xport import spill_partition
-
-        os.makedirs(self.stage_dir, exist_ok=True)
-        blob = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.bin")
-        sections = spill_partition(batches, blob, declared=self.string_widths)
-        if not sections:
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        part = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.{self.codec.ext}"
+        try:
+            tmp = self._assemble(os.path.join(self.path, part), [(blob, sections)])
+        finally:
             os.unlink(blob)
-            return _DtaCommit("", [])
-        return _DtaCommit(blob, sections)
+        return _SpoolCommit(tmp)
+
+    def _assemble(self, target: str, parts: list) -> str:
+        """Assemble ``parts`` under ``target``'s temp name and return it;
+        a failure leaves no temp file behind."""
+        tmp = _temp_name(target)
+        try:
+            self.codec.assemble(tmp, parts=parts)
+        except BaseException:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
+            raise
+        return tmp
+
+    def _publish(self, target: str, messages) -> None:
+        parts = [(m.path, m.sections) for m in messages if m and m.path]
+        os.replace(self._assemble(target, parts), target)
 
     def commit(self, messages):
-        import shutil
+        try:
+            if self.multifile:
+                self._rename_parts(messages)
+            else:
+                self._publish(self.path, messages)
+        finally:
+            shutil.rmtree(self.stage_dir, ignore_errors=True)
 
-        from .formats.sas.xport import assemble_xpt
-
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        from pyspark.sql import types as _T
-
-        assemble_xpt(
-            self.path,
-            parts,
-            dsname=self.dsname,
-            dslabel=self.dslabel,
-            column_order=[
-                (f.name, isinstance(f.dataType, _T.StringType)) for f in self.schema.fields
-            ],
-            string_widths=self.string_widths,
-            version=self.version,
-        )
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
+    def _rename_parts(self, messages) -> None:
+        if self.overwrite:
+            # clear previous contents at COMMIT time (not planning), so a
+            # failed job leaves the old directory intact; temps have a
+            # dot prefix and never match the part glob
+            for old in glob.glob(os.path.join(self.path, f"part-*.{self.codec.ext}")):
+                with contextlib.suppress(OSError):
+                    os.unlink(old)
+        tmps = [m.path for m in messages if m and m.path]
+        for tmp in tmps:
+            d, base = os.path.split(tmp)
+            os.replace(tmp, os.path.join(d, base[1 : -len(".tmp_")]))
+        if not tmps:
+            # empty result: one zero-row file so directory reads still
+            # see the schema (same stance as the single-file sink)
+            self._publish(os.path.join(self.path, f"part-00000-empty.{self.codec.ext}"), [])
 
     def abort(self, messages):
-        import shutil
-
+        for m in messages or []:
+            if self.multifile and m and m.path:
+                with contextlib.suppress(OSError):
+                    os.unlink(m.path)
         shutil.rmtree(self.stage_dir, ignore_errors=True)
 
 
-class _DtaStreamWriter(_DtaWriter, DataSourceStreamArrowWriter):
+class _SpoolStreamSink(_SpoolSink, DataSourceStreamArrowWriter):
     """writeStream.format("readstat").start(dir): each micro-batch
-    assembles into one immutable ``part-{batchId:05d}.dta`` inside the
+    publishes one immutable ``part-{batchId:05d}.{ext}`` inside the
     output DIRECTORY — the drop-directory layout the streaming SOURCE
     and the multi-file batch reader both consume, closing the
     continuous-ingest loop (stat-file stream in -> stat-file stream
-    out). Executor-side encoding is the batch writer's section spill
-    unchanged; per-batch commit streams the sections into the batch's
-    file via a temp name + atomic rename, so a concurrent reader never
-    lists a half-written file, and batchId-named outputs make replayed
-    micro-batches idempotent (exactly-once sink semantics)."""
+    out). Tasks spill exactly as for the batch sink; batchId-named
+    outputs make replayed micro-batches idempotent (exactly-once sink
+    semantics)."""
 
-    def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
-        from pyspark.sql.pandas.types import to_arrow_schema
+    def _stage_key(self) -> str:
+        # Spark builds a fresh writer for every micro-batch commit, so the
+        # stage dir is named by the sink path, not per writer. One query
+        # at a time writes a sink dir (part names are batch ids), and its
+        # batches run one after another.
+        import hashlib
 
-        from .formats.stata.writer import assemble_dta
-
-        os.makedirs(self.path, exist_ok=True)
-        final = os.path.join(self.path, f"part-{batchId:05d}.dta")
-        tmp = final + ".tmp_"
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_dta(
-            tmp,
-            to_arrow_schema(self.schema),
-            parts,
-            value_labels=self.value_labels,
-            variable_labels=self.variable_labels,
-            declared=self.string_widths,
-        )
-        os.replace(tmp, final)
-        for blob, _ in parts:  # only THIS batch's spills; later batches reuse the dir
-            try:
-                os.unlink(blob)
-            except OSError:
-                pass
-
-    def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
-        for m in messages:
-            if m and getattr(m, "blob_path", ""):
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
-
-
-class _SavCommit(WriterCommitMessage):
-    def __init__(self, blob_path: str, sections: list):
-        self.blob_path = blob_path
-        self.sections = sections
-
-
-class _SavWriter(DataSourceArrowWriter):
-    """Distributed uncompressed .sav write, same two-phase shape as
-    _DtaWriter: executors encode record sections with local string
-    widths beside the output path; commit() decides the global layout
-    and streams a numpy re-stride per section (one section of driver
-    memory regardless of dataset size). Uncompressed output keeps the
-    file row-splittable on re-read."""
-
-    def __init__(self, path: str, schema, value_labels=None, variable_labels=None,
-                 data_label: str = "", user_missing=None, staging_dir: str | None = None,
-                 compress: bool = False, string_widths=None):
-        import uuid
-
-        self.path = path
-        self.schema = schema
-        self.value_labels = {
-            col: {float(k): v for k, v in m.items()} for col, m in (value_labels or {}).items()
-        }
-        self.variable_labels = variable_labels or {}
-        self.data_label = data_label
-        self.user_missing = {
-            col: [float(x) for x in xs] for col, xs in (user_missing or {}).items()
-        }
-        self.compress = compress
-        # option("string_widths", '{"col": bytes}') — declaring every
-        # string column's width lets executors emit FINAL (and, with
-        # compress, RLE-compressed) sections; commit() then only
-        # concatenates blobs. All-numeric schemas get this for free.
-        self.string_widths = {k: int(v) for k, v in (string_widths or {}).items()}
-        parent = staging_dir or (os.path.dirname(os.path.abspath(path)) or ".")
-        self.stage_dir = os.path.join(
-            parent, f".{os.path.basename(path)}._stage_{uuid.uuid4().hex}"
-        )
-
-    def write(self, batches):
-        import uuid
-
-        from .formats.spss.writer import spill_sav_partition
-
-        os.makedirs(self.stage_dir, exist_ok=True)
-        blob = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.bin")
-        sections = spill_sav_partition(
-            batches, blob, declared=self.string_widths, compress=self.compress
-        )
-        if not sections:
-            os.unlink(blob)
-            return _SavCommit("", [])
-        return _SavCommit(blob, sections)
-
-    def commit(self, messages):
-        import shutil
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .formats.spss.writer import assemble_sav
-
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_sav(
-            self.path,
-            to_arrow_schema(self.schema),
-            parts,
-            value_labels=self.value_labels,
-            variable_labels=self.variable_labels,
-            data_label=self.data_label,
-            user_missing=self.user_missing,
-            compress=self.compress,
-            declared=self.string_widths,
-        )
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-
-class _SavStreamWriter(_SavWriter, DataSourceStreamArrowWriter):
-    """Streaming .sav sink: the _DtaStreamWriter contract (immutable
-    part-{batchId}.sav per micro-batch, temp-name + atomic rename,
-    idempotent on replay) over the SPSS assembler."""
-
-    def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from .formats.spss.writer import assemble_sav
-
-        os.makedirs(self.path, exist_ok=True)
-        ext = "zsav" if self.compress == "zsav" else "sav"
-        final = os.path.join(self.path, f"part-{batchId:05d}.{ext}")
-        tmp = final + ".tmp_"
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_sav(
-            tmp,
-            to_arrow_schema(self.schema),
-            parts,
-            value_labels=self.value_labels,
-            variable_labels=self.variable_labels,
-            data_label=self.data_label,
-            user_missing=self.user_missing,
-            compress=self.compress,
-            declared=self.string_widths,
-        )
-        os.replace(tmp, final)
-        for blob, _ in parts:
-            try:
-                os.unlink(blob)
-            except OSError:
-                pass
-
-    def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
-        for m in messages:
-            if m and getattr(m, "blob_path", ""):
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
-
-
-class _XptStreamWriter(_XptWriter, DataSourceStreamArrowWriter):
-    """Streaming .xpt sink: the _DtaStreamWriter contract (immutable
-    part-{batchId}.xpt per micro-batch, temp-name + atomic rename,
-    idempotent on replay) over the XPORT assembler — v5 or v8 via
-    option("xport_version"). Closes the transport-format ingest loop:
-    an .xpt drop directory can now be both streamed FROM (the source is
-    per-file format-generic) and streamed TO."""
-
-    def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
-        from pyspark.sql import types as _T
-
-        from .formats.sas.xport import assemble_xpt
-
-        os.makedirs(self.path, exist_ok=True)
-        final = os.path.join(self.path, f"part-{batchId:05d}.xpt")
-        tmp = final + ".tmp_"
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_xpt(
-            tmp,
-            parts,
-            dsname=self.dsname,
-            dslabel=self.dslabel,
-            column_order=[
-                (f.name, isinstance(f.dataType, _T.StringType)) for f in self.schema.fields
-            ],
-            string_widths=self.string_widths,
-            version=self.version,
-        )
-        os.replace(tmp, final)
-        for blob, _ in parts:
-            try:
-                os.unlink(blob)
-            except OSError:
-                pass
-
-    def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
-        for m in messages:
-            if m and getattr(m, "blob_path", ""):
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
-
-
-class _PorWriter(DataSourceArrowWriter):
-    """Distributed .por (SPSS Portable) write: the data section is a
-    pure concatenation of self-delimiting per-case value encodings, so
-    executors encode their partitions to ASCII blobs
-    (formats.spss.portable.encode_cases) and commit() streams header +
-    blobs through an 80-character line re-wrapper with O(1) driver
-    memory. Beyond the reference, which has no .por support at all
-    (src/lib.rs:383-394 dispatches only sas7bdat/dta/sav)."""
-
-    def __init__(self, path: str, schema, staging_dir: str | None = None,
-                 variable_labels=None, value_labels=None):
-        import uuid
-
-        self.path = path
-        self.schema = schema
-        self.variable_labels = variable_labels or {}
-        self.value_labels = value_labels or {}
-        parent = staging_dir or (os.path.dirname(os.path.abspath(path)) or ".")
-        self.stage_dir = os.path.join(
-            parent, f".{os.path.basename(path)}._stage_{uuid.uuid4().hex}"
-        )
-
-    def write(self, batches):
-        import uuid
-
-        import pyarrow as pa
-
-        from .formats.spss.portable import encode_cases
-
-        os.makedirs(self.stage_dir, exist_ok=True)
-        blob = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.txt")
-        widths: dict[str, int] = {}
-        nrows = 0
-        with open(blob, "w", encoding="ascii") as f:
-            for batch in batches:
-                t = pa.Table.from_batches([batch])
-                if not t.num_rows:
-                    continue
-                for i, fld in enumerate(t.schema):
-                    if pa.types.is_string(fld.type) or pa.types.is_large_string(fld.type):
-                        col = t.column(i).to_pylist()
-                        w = max([len(str(v)) for v in col if v is not None] or [0])
-                        widths[fld.name] = max(widths.get(fld.name, 0), w)
-                f.write(encode_cases(t))
-                nrows += t.num_rows
-        if not nrows:
-            os.unlink(blob)
-            return _DtaCommit("", [widths])
-        return _DtaCommit(blob, [widths])
-
-    def _assemble(self, messages, target: str) -> None:
-        from pyspark.sql import types as _T
-
-        from .formats.spss.portable import _LINE, _var_of_field, write_header
-        import pyarrow as pa
-
-        widths: dict[str, int] = {}
-        for m in messages:
-            if m and m.sections:
-                for k, v in m.sections[0].items():
-                    widths[k] = max(widths.get(k, 0), v)
-        variables = []
-        for f in self.schema.fields:
-            if isinstance(f.dataType, _T.StringType):
-                af = pa.field(f.name, pa.string())
-            elif isinstance(f.dataType, _T.DateType):
-                af = pa.field(f.name, pa.date32())
-            elif isinstance(f.dataType, (_T.TimestampType, _T.TimestampNTZType)):
-                af = pa.field(f.name, pa.timestamp("us"))
-            elif isinstance(f.dataType, (_T.IntegerType, _T.LongType, _T.ShortType,
-                                         _T.ByteType, _T.BooleanType)):
-                af = pa.field(f.name, pa.int64())
-            else:
-                af = pa.field(f.name, pa.float64())
-            variables.append(_var_of_field(af, widths.get(f.name, 1)))
-        header = write_header(variables, self.variable_labels, self.value_labels)
-        carry = ""
-        with open(target, "w", encoding="ascii", newline="") as out:
-
-            def emit(chunk: str) -> None:
-                nonlocal carry
-                carry += chunk
-                while len(carry) >= _LINE:
-                    out.write(carry[:_LINE] + "\n")
-                    carry = carry[_LINE:]
-
-            emit(header)
-            for m in messages:
-                if m and m.blob_path:
-                    with open(m.blob_path, encoding="ascii") as f:
-                        while True:
-                            chunk = f.read(1 << 20)
-                            if not chunk:
-                                break
-                            emit(chunk)
-            if carry:
-                out.write(carry.ljust(_LINE, "Z") + "\n")
-
-    def commit(self, messages):
-        import shutil
-
-        self._assemble(messages, self.path)
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-
-class _PorStreamWriter(_PorWriter, DataSourceStreamArrowWriter):
-    """Streaming .por sink: the _DtaStreamWriter contract (immutable
-    part-{batchId}.por per micro-batch, temp-name + atomic rename,
-    idempotent on replay) over the portable assembler — completing the
-    sink matrix for every format this engine reads."""
+        return hashlib.sha1(os.path.abspath(self.path).encode()).hexdigest()
 
     def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
         os.makedirs(self.path, exist_ok=True)
-        final = os.path.join(self.path, f"part-{batchId:05d}.por")
-        tmp = final + ".tmp_"
-        self._assemble(messages, tmp)
-        os.replace(tmp, final)
-        for m in messages:
-            if m and m.blob_path:
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
+        try:
+            self._publish(os.path.join(self.path, f"part-{batchId:05d}.{self.codec.ext}"), messages)
+        finally:
+            self._drop_spills(messages)
 
     def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
+        self._drop_spills(messages)
+
+    def _drop_spills(self, messages) -> None:
+        """Unlink this batch's blobs, then the (then empty) stage dir."""
         for m in messages:
-            if m and getattr(m, "blob_path", ""):
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
-
-
-class _BdatWriter(DataSourceArrowWriter):
-    """Distributed native .sas7bdat write (beyond the reference, which
-    only emits CSV + a .sas load script): executors spill fixed-width
-    row sections (formats.sas.bdat_writer.spill_partition), the driver
-    commit re-strides to global char widths and streams header + META
-    page + DATA pages — the same two-phase shape as the .dta/.sav/.xpt
-    writers."""
-
-    def __init__(self, path: str, schema, dsname: str = "DATA",
-                 staging_dir: str | None = None, string_widths=None,
-                 variable_labels=None, compress: bool = False,
-                 column_formats=None):
-        import uuid
-
-        self.path = path
-        self.schema = schema
-        self.dsname = dsname
-        self.compress = compress
-        self.variable_labels = variable_labels or {}
-        # per-column SAS display format names (e.g. a .sas7bcat catalog
-        # entry like PRIOF) — carried into each column's format subheader
-        self.column_formats = dict(column_formats or {})
-        self.string_widths = {k: int(v) for k, v in (string_widths or {}).items()}
-        parent = staging_dir or (os.path.dirname(os.path.abspath(path)) or ".")
-        self.stage_dir = os.path.join(
-            parent, f".{os.path.basename(path)}._stage_{uuid.uuid4().hex}"
-        )
-
-    def write(self, batches):
-        import uuid
-
-        from .formats.sas.bdat_writer import spill_partition
-
-        os.makedirs(self.stage_dir, exist_ok=True)
-        blob = os.path.join(self.stage_dir, f"part-{uuid.uuid4().hex}.bin")
-        sections = spill_partition(batches, blob, declared=self.string_widths,
-                                   column_formats=self.column_formats)
-        if not sections:
-            os.unlink(blob)
-            return _DtaCommit("", [])
-        return _DtaCommit(blob, sections)
-
-    def commit(self, messages):
-        import shutil
-
-        from pyspark.sql import types as _T
-
-        from .formats.sas.bdat_writer import assemble_sas7bdat
-
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_sas7bdat(
-            self.path,
-            parts,
-            dsname=self.dsname,
-            column_order=[
-                (f.name, isinstance(f.dataType, _T.StringType)) for f in self.schema.fields
-            ],
-            string_widths=self.string_widths,
-            variable_labels=self.variable_labels,
-            compress=self.compress,
-        )
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-    def abort(self, messages):
-        import shutil
-
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-
-
-class _BdatStreamWriter(_BdatWriter, DataSourceStreamArrowWriter):
-    """Streaming native .sas7bdat sink: immutable part-{batchId}.sas7bdat
-    per micro-batch, temp-name + atomic rename, idempotent on replay —
-    the same contract as the dta/sav/xpt stream sinks."""
-
-    def commit(self, messages, batchId: int) -> None:  # type: ignore[override]
-        import shutil
-
-        from pyspark.sql import types as _T
-
-        from .formats.sas.bdat_writer import assemble_sas7bdat
-
-        os.makedirs(self.path, exist_ok=True)
-        final = os.path.join(self.path, f"part-{batchId:05d}.sas7bdat")
-        tmp = final + ".tmp_"
-        parts = [(m.blob_path, m.sections) for m in messages if m and m.blob_path]
-        assemble_sas7bdat(
-            tmp,
-            parts,
-            dsname=self.dsname,
-            column_order=[
-                (f.name, isinstance(f.dataType, _T.StringType)) for f in self.schema.fields
-            ],
-            string_widths=self.string_widths,
-        )
-        os.replace(tmp, final)
-        for blob, _ in parts:
-            try:
-                os.unlink(blob)
-            except OSError:
-                pass
-
-    def abort(self, messages, batchId: int) -> None:  # type: ignore[override]
-        for m in messages:
-            if m and getattr(m, "blob_path", ""):
-                try:
-                    os.unlink(m.blob_path)
-                except OSError:
-                    pass
+            if m and m.path:
+                with contextlib.suppress(OSError):
+                    os.unlink(m.path)
+        with contextlib.suppress(OSError):
+            os.rmdir(self.stage_dir)
 
 
 def register(spark) -> None:
     """Register format("readstat") on this SparkSession."""
     spark.dataSource.register(ReadstatDataSource)
-
-
-class _PartFileCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, final_path: str):
-        self.tmp_path = tmp_path
-        self.final_path = final_path
-
-
-class _MultiPartWriter(DataSourceArrowWriter):
-    """Partitioned DIRECTORY sink (option("multifile","true")): each
-    task single-shot-writes its partition as one complete standalone
-    file of the target format — part-{partitionId}-{uuid}.{ext} — fully
-    executor-side. Two-phase exactly-once: tasks write to dot-tmp names
-    and return them in the commit message; the driver commit() renames
-    exactly the committed set (task retries leave only unreferenced
-    tmps, removed by abort/cleanup). The read side lists the directory
-    and plans one partition per file, so write->read round-trips at any
-    file count.
-
-    Memory shape: a task buffers ITS partition as one Arrow table (the
-    single-shot writers need the full table for width decisions) —
-    bounded by upstream partition sizing, the same contract as columnar
-    writers that buffer a row group.
-    """
-
-    _EXT = {"stata": "dta", "spss": "sav", "sas": "sas7bdat", "xport": "xpt", "por": "por"}
-
-    def __init__(self, path: str, schema, fmt: str, options, overwrite: bool = False):
-        import json
-
-        self.path = path
-        self.schema = schema
-        self.fmt = fmt
-        self.overwrite = overwrite
-        self.ext = self._EXT[fmt]
-        if fmt == "spss" and str(options.get("path", "")).lower().endswith("zsav"):
-            self.ext = "zsav"
-        self.value_labels = {
-            col: {int(k): v for k, v in m.items()}
-            for col, m in json.loads(options.get("value_labels", "{}")).items()
-        }
-        self.variable_labels = json.loads(options.get("variable_labels", "{}"))
-        self.string_widths = {
-            k: int(v) for k, v in json.loads(options.get("string_widths", "{}")).items()
-        }
-        self.dta_version = int(options.get("dta_version", "118"))
-        self.xport_version = int(options.get("xport_version", "5"))
-        compress = str(options.get("compress", "")).lower()
-        self.compress = (
-            compress.upper() if compress in ("rle", "rdc") else _true(options.get("compress"), default=False)
-        )
-        os.makedirs(path, exist_ok=True)
-
-    def _arrow_schema(self):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(self.schema)
-
-    def _write_one(self, table, out_path: str) -> None:
-        if self.fmt == "stata":
-            from .formats.stata.writer import write_dta
-
-            write_dta(table, out_path, value_labels=self.value_labels,
-                      variable_labels=self.variable_labels, version=self.dta_version)
-        elif self.fmt == "spss":
-            from .formats.spss.writer import write_sav
-
-            # value_labels keyed by float for SPSS
-            vl = {c: {float(k): v for k, v in m.items()} for c, m in self.value_labels.items()}
-            write_sav(table, out_path, value_labels=vl,
-                      variable_labels=self.variable_labels,
-                      compress="zsav" if self.ext == "zsav" else self.compress)
-        elif self.fmt == "sas":
-            from .formats.sas.bdat_writer import write_sas7bdat
-
-            write_sas7bdat(table, out_path, string_widths=self.string_widths or None,
-                           variable_labels=self.variable_labels, compress=self.compress)
-        elif self.fmt == "xport":
-            from .formats.sas.xport import write_xpt
-
-            write_xpt(table, out_path, string_widths=self.string_widths or None,
-                      version=self.xport_version)
-        elif self.fmt == "por":
-            from .formats.spss.portable import write_por
-
-            write_por(table, out_path, variable_labels=self.variable_labels or None)
-        else:  # pragma: no cover — writer() only routes the five formats
-            raise ValueError(f"multifile write unsupported for format {self.fmt}")
-
-    def write(self, batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        batches = list(batches)
-        table = (
-            pa_lib.Table.from_batches(batches)
-            if batches
-            else pa_lib.Table.from_batches([], schema=self._arrow_schema())
-        )
-        if table.num_rows == 0:
-            return _PartFileCommit("", "")
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        base = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.{self.ext}"
-        tmp = os.path.join(self.path, f".{base}.tmp_")
-        self._write_one(table, tmp)
-        return _PartFileCommit(tmp, os.path.join(self.path, base))
-
-    def commit(self, messages):
-        import glob as _glob
-
-        if self.overwrite:
-            # clear previous contents at COMMIT time (not planning), so a
-            # failed job leaves the old directory intact; tmp files have a
-            # dot prefix and never match the part glob
-            for old in _glob.glob(os.path.join(self.path, f"part-*.{self.ext}")):
-                try:
-                    os.unlink(old)
-                except OSError:
-                    pass
-        published = 0
-        for m in messages:
-            if m and m.tmp_path:
-                os.replace(m.tmp_path, m.final_path)
-                published += 1
-        if not published:
-            # empty result: one zero-row file so directory reads still
-            # see the schema (same stance as the single-file writers)
-            self._write_one(
-                pa_lib.Table.from_batches([], schema=self._arrow_schema()),
-                os.path.join(self.path, f"part-00000-empty.{self.ext}"),
-            )
-
-    def abort(self, messages):
-        for m in messages or []:
-            if m and m.tmp_path:
-                try:
-                    os.unlink(m.tmp_path)
-                except OSError:
-                    pass

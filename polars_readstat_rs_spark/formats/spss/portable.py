@@ -36,6 +36,7 @@ Design notes:
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, field
 from fractions import Fraction
 
@@ -704,11 +705,18 @@ def write_header(
     return "".join(out)
 
 
-def _wrap(stream: str) -> bytes:
-    pad = (-len(stream)) % _LINE
-    stream += "Z" * pad
-    lines = [stream[i : i + _LINE] for i in range(0, len(stream), _LINE)]
-    return ("\n".join(lines) + "\n").encode("ascii")
+def _write_wrapped(path: str, chunks) -> None:
+    """Write the character stream ``chunks`` to ``path`` as 80-character
+    lines, the last one padded with 'Z'. Holds one chunk at a time."""
+    carry = ""
+    with open(path, "w", encoding="ascii", newline="") as out:
+        for chunk in chunks:
+            carry += chunk
+            full = len(carry) - len(carry) % _LINE
+            out.write("".join(carry[i : i + _LINE] + "\n" for i in range(0, full, _LINE)))
+            carry = carry[full:]
+        if carry:
+            out.write(carry.ljust(_LINE, "Z") + "\n")
 
 
 def assemble_por(
@@ -718,10 +726,53 @@ def assemble_por(
 ) -> None:
     """Driver commit: header + concatenated executor case streams,
     re-wrapped to 80-character lines and 'Z'-padded."""
-    _ = [b for b in case_blobs]
-    stream = header + "".join(case_blobs)
-    with open(path, "wb") as f:
-        f.write(_wrap(stream))
+    _write_wrapped(path, [header, *case_blobs])
+
+
+def spill_partition(batches, blob_path: str) -> list[dict]:
+    """Executor side of the distributed write: append each Arrow batch's
+    case stream to ``blob_path``. Returns ``[widths]``, the partition's
+    longest value per string column, or ``[]`` when it has no rows."""
+    widths: dict[str, int] = {}
+    nrows = 0
+    with open(blob_path, "w", encoding="ascii") as f:
+        for batch in batches:
+            t = pa.Table.from_batches([batch])
+            if not t.num_rows:
+                continue
+            for i, fld in enumerate(t.schema):
+                if pa.types.is_string(fld.type) or pa.types.is_large_string(fld.type):
+                    col = t.column(i).to_pylist()
+                    w = max([len(str(v)) for v in col if v is not None] or [0])
+                    widths[fld.name] = max(widths.get(fld.name, 0), w)
+            f.write(encode_cases(t))
+            nrows += t.num_rows
+    return [widths] if nrows else []
+
+
+def _read_chunks(path: str):
+    with open(path, encoding="ascii") as f:
+        while chunk := f.read(1 << 20):
+            yield chunk
+
+
+def assemble_partitions(
+    path: str,
+    schema,
+    parts: list[tuple[str, list[dict]]],
+    variable_labels: dict[str, str] | None = None,
+    value_labels: dict[str, dict] | None = None,
+) -> None:
+    """Driver commit of the distributed write: the header, with string
+    widths merged over the partitions, then every spilled case stream,
+    re-wrapped to 80-character lines one chunk at a time."""
+    widths: dict[str, int] = {}
+    for _, secs in parts:
+        for k, v in secs[0].items():
+            widths[k] = max(widths.get(k, 0), v)
+    variables = [_var_of_field(f, widths.get(f.name, 1)) for f in schema]
+    header = write_header(variables, variable_labels, value_labels)
+    _write_wrapped(path, itertools.chain([header], *(_read_chunks(blob) for blob, _ in parts)))
 
 
 def write_por(

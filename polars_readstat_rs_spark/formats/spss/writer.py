@@ -571,6 +571,8 @@ def assemble_sav(
         )
         if compress:
             struct.pack_into("<i", header, 72, 2 if zsav else 1)
+        if zsav:
+            header[0:4] = b"$FL3"  # the zlib container's magic, as write_sav
         out.write(header)
         if zsav:
             import os as _os
@@ -612,7 +614,9 @@ def assemble_sav(
                                 continue
                             gw = spec.width * 8
                             lw = sec["cols"][i]["width"] * 8
-                            src = local[fld].view(np.uint8).reshape(n, lw)
+                            # a field of a multi-field record is strided:
+                            # copy it contiguous before the byte view
+                            src = np.ascontiguousarray(local[fld]).view(np.uint8).reshape(n, lw)
                             dst = np.full((n, gw), 0x20, np.uint8)  # space padding
                             dst[:, :lw] = src
                             rec[fld] = np.ascontiguousarray(dst).view(f"S{gw}").reshape(n)

@@ -842,7 +842,3 @@ def assemble_dta(
     for chunk in extra_gso_chunks:
         w.write_strls(chunk)
     w.finish()
-
-
-def _np_fmt(c: _Col) -> str:
-    return _np_fmt_code(c.typecode, c.width)

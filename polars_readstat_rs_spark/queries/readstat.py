@@ -416,7 +416,7 @@ def r10_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def r11_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming .dta SINK (datasource._DtaStreamWriter): the r10 drop
+    """Streaming .dta SINK (datasource._SpoolStreamSink): the r10 drop
     directory streams through writeStream.format("readstat") into a
     part-per-micro-batch .dta directory, which the BATCH reader then
     aggregates — the hash gate covers source offsets, per-batch

@@ -14,6 +14,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 VALUE_LABELS = json.dumps({"g": {"1": "one", "2": "two", "3": "three"}})
 VARIABLE_LABELS = json.dumps({"k": "Row key", "v": "Measured value"})
@@ -42,6 +43,7 @@ BATCH_CELLS = [
     ("dta_v117", "out.dta", {**DTA, "dta_version": "117"}),
     ("dta_v118", "out.dta", {**DTA, "dta_version": "118"}),
     ("dta_v119", "out.dta", {**DTA, "dta_version": "119"}),
+    ("sav_default", "out.sav", {}),
     ("sav_plain", "out.sav", SAV),
     ("sav_compress", "out.sav", {**SAV, "compress": "true"}),
     ("zsav", "out.zsav", SAV),
@@ -71,11 +73,15 @@ GOLDEN = {
     "batch/sas7bdat_rdc": "3b782f00a936864ffa83b24f39d7ba146e34760147d08ebb50ee830382339ac2",
     "batch/sas7bdat_rle": "abdea42066f4459840862c065fe48f64449934aafe590cd6d9d1ccd2f6350ed5",
     "batch/sav_compress": "0a8ab962301077c6dcc85a63ccf1b07b0ab5ff241121282adae24151b13d6fea",
+    # new cell: re-striding undeclared string widths across partitions
+    # used to fail; equals the one-partition stream/spss output
+    "batch/sav_default": "d0b00ca0417d1ad99fdbe5a48065c44444069b223c001cd8095114c9444218ff",
     "batch/sav_plain": "8f6a70bd732ec272c7a19f373139b52db8011ad1930a83786c28e5a85f6e26d5",
     "batch/xpt_default": "23b3be67a8d5f37c346fdec5d5d8132f5d1790f954a3c87b47fe4268c668a192",
     "batch/xpt_v5": "ff31fe45a73f59297d4e0afc6e56b3f8f35fb0d29e0a593168bc709be34c094a",
     "batch/xpt_v8": "bdd2853c793c12ebb65c0ad73aad26e4dfa1f3956a056663f04f04fb696ccb6e",
-    "batch/zsav": "bde4f34daecf83bb120aec4073c094471bb2ba4c67f4456ef3c2f40239a72bbf",
+    # $FL2 -> $FL3: the zlib container's magic, as write_sav writes it
+    "batch/zsav": "730e4f49637761f16160912d6ae07a717f224ea67763404b57318c18aa64eff1",
     "multifile/dta": [
         "25bafaf5b85a6b6e3ef708c7c8d4a24631c987f0f622b765082b62b3413516cc",
         "3dc6b3d2547d651d5ccec5555b7a03796d1583abd246c0ae2bb725a34be2633f",
@@ -184,3 +190,141 @@ def test_sink_golden_bytes(spark, tmp_path):
     assert set(got) == set(GOLDEN)
     diff = {cell: got[cell] for cell in GOLDEN if got[cell] != GOLDEN[cell]}
     assert not diff, diff
+
+
+def test_zsav_distributed_write_equals_single_shot(spark, tmp_path):
+    """A one-partition distributed .zsav write is byte-identical to
+    write_sav(..., compress="zsav"), magic ($FL3) included."""
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+
+    df = golden_frame(spark).coalesce(1)
+    out = str(tmp_path / "one.zsav")
+    df.write.format("readstat").mode("overwrite").save(out)
+    ref = str(tmp_path / "ref.zsav")
+    write_sav(df.toArrow(), ref, compress="zsav")
+    with open(out, "rb") as a, open(ref, "rb") as b:
+        got = a.read()
+        assert got[:4] == b"$FL3"
+        assert got == b.read()
+
+
+def _read_back(fmt: str, path: str):
+    from polars_readstat_rs_spark.formats.sas import parser as sas_parser
+    from polars_readstat_rs_spark.formats.sas import xport
+    from polars_readstat_rs_spark.formats.spss import parser as spss_parser
+    from polars_readstat_rs_spark.formats.spss import portable
+    from polars_readstat_rs_spark.formats.stata import parser as stata_parser
+
+    readers = {
+        "stata": stata_parser.read_metadata,
+        "spss": spss_parser.read_metadata,
+        "xport": xport.read_metadata,
+        "sas": sas_parser.read_metadata,
+        "por": portable.read_metadata,
+    }
+    return readers[fmt](path)
+
+
+def _var(meta, name: str):
+    cols = meta.columns if hasattr(meta, "columns") else meta.variables
+    return next(v for v in cols if v.name == name)
+
+
+# (format, option, value, check on the output's metadata): each option
+# one of the sinks used to drop, checked on every sink
+OPTION_CASES = [
+    ("stata", "dta_version", "117", lambda m: m.version == 117),
+    ("stata", "string_widths", '{"s": 20}', lambda m: _var(m, "s").width == 20),
+    ("spss", "user_missing", '{"v": [-99.0]}', lambda m: _var(m, "v").missing_doubles == [-99.0]),
+    ("spss", "data_label", "golden data", lambda m: m.data_label.strip() == "golden data"),
+    ("spss", "string_widths", '{"s": 20}', lambda m: _var(m, "s").string_len == 20),
+    ("spss", "compress", "zsav", lambda m: m.compression == 2),
+    ("xport", "dsname", "GOLD", lambda m: m.dataset_name == "GOLD"),
+    ("xport", "data_label", "golden data", lambda m: m.dataset_label == "golden data"),
+    ("sas", "compress", "rle", lambda m: m.compression == "RLE"),
+    ("sas", "variable_labels", VARIABLE_LABELS, lambda m: _var(m, "k").label == "Row key"),
+    ("sas", "column_formats", '{"g": "GFMT"}', lambda m: _var(m, "g").fmt == "GFMT"),
+    ("sas", "dsname", "GOLD", lambda m: m.dataset_name == "GOLD"),
+    ("por", "value_labels", VALUE_LABELS, lambda m: _var(m, "g").value_labels == {1.0: "one", 2.0: "two", 3.0: "three"}),
+]
+
+EXT = {"stata": "dta", "spss": "sav", "xport": "xpt", "sas": "sas7bdat", "por": "por"}
+
+
+@pytest.mark.parametrize("sink", ["batch", "multifile", "stream"])
+@pytest.mark.parametrize(
+    "fmt,option,value,check", OPTION_CASES, ids=[f"{c[0]}-{c[1]}" for c in OPTION_CASES]
+)
+def test_every_sink_honours_option(spark, tmp_path, sink, fmt, option, value, check):
+    from polars_readstat_rs_spark.datasource import register
+
+    register(spark)
+    df = golden_frame(spark)
+    out = tmp_path / f"out.{EXT[fmt]}"
+    if sink == "stream":
+        drop = tmp_path / "in"
+        drop.mkdir()
+        df.write.format("readstat").mode("overwrite").save(str(drop / "a.dta"))
+        q = (
+            spark.readStream.format("readstat")
+            .load(str(drop))
+            .writeStream.format("readstat")
+            .option("format", fmt)
+            .option(option, value)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .start(str(out))
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    else:
+        w = df.write.format("readstat").mode("overwrite").option(option, value)
+        w.option("multifile", str(sink == "multifile")).save(str(out))
+    written = sorted(glob.glob(str(out / "part-*"))) if out.is_dir() else [str(out)]
+    assert written
+    assert check(_read_back(fmt, written[0])), (sink, option)
+
+
+def _boom(target, parts):
+    with open(target, "wb") as f:
+        f.write(b"half a file")
+    raise OSError("disk full")
+
+
+@pytest.mark.parametrize("sink", ["batch", "stream"])
+def test_failed_publish_keeps_previous_output(tmp_path, sink):
+    """A commit whose assembly fails midway leaves the previous output
+    byte-identical and no temp file or staging dir behind."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from polars_readstat_rs_spark.datasource import ReadstatDataSource
+
+    schema = T.StructType([T.StructField("k", T.IntegerType()), T.StructField("s", T.StringType())])
+    batch = pa.record_batch(
+        [pa.array([1, 2, 3], pa.int32()), pa.array(["a", "bb", None])], names=["k", "s"]
+    )
+    if sink == "batch":
+        target = tmp_path / "out.dta"
+        source = ReadstatDataSource({"path": str(target)})
+        make = lambda: source.writer(schema, True)  # noqa: E731
+        commit = lambda w, msgs: w.commit(msgs)  # noqa: E731
+    else:
+        target = tmp_path / "out" / "part-00000.dta"
+        source = ReadstatDataSource({"path": str(tmp_path / "out")})
+        make = lambda: source.streamWriter(schema, True)  # noqa: E731
+        commit = lambda w, msgs: w.commit(msgs, 0)  # noqa: E731
+    w = make()
+    commit(w, [w.write(iter([batch]))])
+    before = target.read_bytes()
+    listing = sorted(os.listdir(tmp_path))
+
+    w = make()
+    w.codec = w.codec._replace(assemble=_boom)
+    msgs = [w.write(iter([batch, batch]))]
+    with pytest.raises(OSError, match="disk full"):
+        commit(w, msgs)
+    assert target.read_bytes() == before
+    assert sorted(os.listdir(tmp_path)) == listing
+    assert os.listdir(target.parent) == [target.name]

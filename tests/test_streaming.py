@@ -347,6 +347,7 @@ def test_readstat_stream_sink_roundtrip(spark, tmp_path, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
 
     import os
 
@@ -399,6 +400,7 @@ def test_readstat_stream_checkpoint_recovery(spark, tmp_path, sf_dir):
     nation[10:].to_stata(str(tmp), version=118, write_index=False)
     tmp.rename(drop / "b.dta")
     run_until_drained()  # restarted query: must deliver ONLY b.dta
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
 
     back = spark.read.format("readstat").load(str(out))
     assert back.count() == len(nation)  # no duplicates, nothing lost
@@ -435,6 +437,7 @@ def test_readstat_stream_sink_sav(spark, tmp_path, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
     back = spark.read.format("readstat").load(str(out))
     assert back.count() == len(nation)
     assert sorted(r.n_name for r in back.collect()) == sorted(nation.n_name)
@@ -554,6 +557,7 @@ def test_readstat_stream_sink_xpt(spark, tmp_path, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
     parts = sorted(out.glob("part-*.xpt"))
     assert parts and X.read_metadata(str(parts[0])).version == 8
     back = spark.read.format("readstat").load(str(out))
@@ -598,6 +602,7 @@ def test_readstat_stream_sink_sas7bdat(spark, tmp_path, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
     parts = sorted(out.glob("part-*.sas7bdat"))
     assert parts
     ref = pd.read_sas(str(parts[0]), encoding="utf-8")
@@ -641,6 +646,7 @@ def test_readstat_stream_sink_por(spark, tmp_path, sf_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    assert not list(tmp_path.glob(".*._stage_*")), "stage dir must not outlive the query"
     parts = sorted(out.glob("part-*.por"))
     assert parts
     meta = P.read_metadata(str(parts[0]))
