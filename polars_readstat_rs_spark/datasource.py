@@ -1090,8 +1090,8 @@ def _codec(fmt: str, options, schema) -> _Codec:
 
 class _SpoolCommit(WriterCommitMessage):
     """A task's output: its spilled blob and section metadata, or (for
-    a multifile write) the part file it assembled, still under its
-    temp name."""
+    a multifile write) the name of the part file it assembled, which
+    sits under its temp name until commit."""
 
     def __init__(self, path: str = "", sections: list | None = None):
         self.path = path
@@ -1161,12 +1161,12 @@ class _SpoolSink(DataSourceArrowWriter):
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        part = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.{self.codec.ext}"
+        part = os.path.join(self.path, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.{self.codec.ext}")
         try:
-            tmp = self._assemble(os.path.join(self.path, part), [(blob, sections)])
+            self._assemble(part, [(blob, sections)])
         finally:
             os.unlink(blob)
-        return _SpoolCommit(tmp)
+        return _SpoolCommit(part)
 
     def _assemble(self, target: str, parts: list) -> str:
         """Assemble ``parts`` under ``target``'s temp name and return it;
@@ -1201,11 +1201,10 @@ class _SpoolSink(DataSourceArrowWriter):
             for old in glob.glob(os.path.join(self.path, f"part-*.{self.codec.ext}")):
                 with contextlib.suppress(OSError):
                     os.unlink(old)
-        tmps = [m.path for m in messages if m and m.path]
-        for tmp in tmps:
-            d, base = os.path.split(tmp)
-            os.replace(tmp, os.path.join(d, base[1 : -len(".tmp_")]))
-        if not tmps:
+        parts = [m.path for m in messages if m and m.path]
+        for part in parts:
+            os.replace(_temp_name(part), part)
+        if not parts:
             # empty result: one zero-row file so directory reads still
             # see the schema (same stance as the single-file sink)
             self._publish(os.path.join(self.path, f"part-00000-empty.{self.codec.ext}"), [])
@@ -1214,7 +1213,7 @@ class _SpoolSink(DataSourceArrowWriter):
         for m in messages or []:
             if self.multifile and m and m.path:
                 with contextlib.suppress(OSError):
-                    os.unlink(m.path)
+                    os.unlink(_temp_name(m.path))
         shutil.rmtree(self.stage_dir, ignore_errors=True)
 
 

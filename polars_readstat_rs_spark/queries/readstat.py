@@ -955,8 +955,8 @@ def r22_rdc_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def r23_multifile_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned DIRECTORY sink gate (the 100 TB write shape): parquet
-    -> option("multifile","true") .dta write — each task single-shot
-    writes one complete part-NNNNN.dta, commit only renames (no driver
+    -> option("multifile","true") .dta write — each task spills and
+    assembles one complete part-NNNNN.dta, commit only renames (no driver
     assembly) -> directory read (one partition per file) -> aggregate
     vs DuckDB on the parquet. Proves the executor-side writer and the
     multi-file scan agree end-to-end."""
