@@ -572,7 +572,7 @@ def assemble_sav(
         if compress:
             struct.pack_into("<i", header, 72, 2 if zsav else 1)
         if zsav:
-            header[0:4] = b"$FL3"  # the zlib container's magic, as write_sav
+            header[0:4] = b"$FL3"  # the zlib container's magic, as write_sav writes it
         out.write(header)
         if zsav:
             import os as _os
