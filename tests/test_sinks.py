@@ -328,3 +328,199 @@ def test_failed_publish_keeps_previous_output(tmp_path, sink):
     assert target.read_bytes() == before
     assert sorted(os.listdir(tmp_path)) == listing
     assert os.listdir(target.parent) == [target.name]
+
+
+# ------------------------------------------------- single-shot write_* cells
+#
+# The format-level write_* functions write one in-memory table. Each cell
+# below is hashed over every table of single_shot_tables(); a cell key is
+# "<cell>/<table>".
+
+PY_VALUE_LABELS = {"g": {1: "one", 2: "two", 3: "three"}}
+PY_VARIABLE_LABELS = {"k": "Row key", "v": "Measured value", "a_very_long_name": "Long"}
+
+
+def single_shot_tables() -> dict:
+    """A 7-row mixed-type table, a 2-chunk table, a 0-row table and a
+    table whose column names are longer than 8 characters (two of them
+    equal in their first 8). Row counts times record widths are not
+    multiples of 8, so RLE streams end in a partial control group."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    n = 7
+    mixed = pa.table(
+        {
+            "k": pa.array([1, 2, None, 4, 5, 6, 7], pa.int64()),
+            "i": pa.array(range(n), pa.int32()),
+            "v": pa.array([0.5, None, -99.0, 3.25, 1e300, -0.0, 7.0]),
+            "b": pa.array([True, False, None, True, True, False, True]),
+            "d": pa.array([dt.date(2020, 1, i + 1) if i != 3 else None for i in range(n)], pa.date32()),
+            "ts": pa.array(
+                [dt.datetime(2021, 5, i + 1, 12, 30, 15, 250000) if i != 2 else None for i in range(n)],
+                pa.timestamp("us"),
+            ),
+            "s": pa.array(["a", None, "ccc", "", "hello world", "x" * 30, "zz"]),
+            "w": pa.array(["y" * 300, "short", None, "q", "r" * 299, "", "tail"]),
+            "g": pa.array([1, 2, 3, 1, 2, 3, 1], pa.int32()),
+        }
+    )
+    longname = pa.table(
+        {
+            "k": pa.array([10, 20, 30, None, 50], pa.int64()),
+            "s": pa.array(["p", "qq", None, "rrrr", "s"]),
+            "a_very_long_name": pa.array([1.5, None, 2.5, 3.5, 4.5]),
+            "a_very_long_other": pa.array(["u", "vv", "www", None, ""]),
+            "g": pa.array([3, 2, 1, 2, 3], pa.int32()),
+        }
+    )
+    return {
+        "mixed": mixed,
+        "chunked": pa.concat_tables([mixed, mixed.slice(2)]),
+        "empty": mixed.slice(0, 0),
+        "longname": longname,
+    }
+
+
+def strl_table():
+    """Strings over 2045 bytes and with trailing spaces: the .dta strL
+    (GSO heap) path, which v117 does not support."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "k": pa.array([1, 2, 3, 4], pa.int64()),
+            "big": pa.array([2**40, None, -5, 7], pa.int64()),
+            "long": pa.array(["L" * 3000, None, "", "m" * 2046]),
+            "sp": pa.array(["trail ", "none", None, " "]),
+            "g": pa.array([1, 2, 3, 1], pa.int32()),
+        }
+    )
+
+
+def _single_shot_cells() -> list:
+    """(cell, extension, write(table, path)); xpt cells drop the date and
+    timestamp columns, which the XPORT writer does not encode."""
+    from polars_readstat_rs_spark.formats.sas.bdat_writer import write_sas7bdat
+    from polars_readstat_rs_spark.formats.sas.xport import write_xpt
+    from polars_readstat_rs_spark.formats.spss.portable import write_por
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+    from polars_readstat_rs_spark.formats.stata.writer import write_dta
+
+    dta = dict(value_labels=PY_VALUE_LABELS, variable_labels=PY_VARIABLE_LABELS, data_label="golden data")
+    sav = dict(
+        value_labels={c: {float(k): v for k, v in m.items()} for c, m in PY_VALUE_LABELS.items()},
+        variable_labels=PY_VARIABLE_LABELS,
+        data_label="golden data",
+        user_missing={"v": [-99.0]},
+    )
+    xpt = dict(dsname="GOLD", dslabel="golden data", string_widths={"s": 40})
+    sas = dict(
+        dsname="GOLD",
+        string_widths={"s": 40},
+        variable_labels=PY_VARIABLE_LABELS,
+        column_formats={"g": "GFMT"},
+    )
+
+    def no_temporal(t):
+        return t.select([c for c in t.column_names if c not in ("d", "ts")])
+
+    return [
+        ("dta_v117", "dta", lambda t, p: write_dta(t, p, version=117, **dta)),
+        ("dta_v118", "dta", lambda t, p: write_dta(t, p, version=118, **dta)),
+        ("dta_v119", "dta", lambda t, p: write_dta(t, p, version=119, **dta)),
+        ("sav_plain", "sav", lambda t, p: write_sav(t, p, **sav)),
+        ("sav_compress", "sav", lambda t, p: write_sav(t, p, compress=True, **sav)),
+        ("zsav", "zsav", lambda t, p: write_sav(t, p, compress="zsav", **sav)),
+        ("sav_big_endian", "sav", lambda t, p: write_sav(t, p, endian=">", **sav)),
+        ("xpt_v5", "xpt", lambda t, p: write_xpt(no_temporal(t), p, version=5, **xpt)),
+        ("xpt_v8", "xpt", lambda t, p: write_xpt(no_temporal(t), p, version=8, **xpt)),
+        ("sas7bdat_plain", "sas7bdat", lambda t, p: write_sas7bdat(t, p, **sas)),
+        ("sas7bdat_rle", "sas7bdat", lambda t, p: write_sas7bdat(t, p, compress="RLE", **sas)),
+        ("sas7bdat_rdc", "sas7bdat", lambda t, p: write_sas7bdat(t, p, compress="RDC", **sas)),
+        ("por_labels", "por", lambda t, p: write_por(
+            t, p, variable_labels=PY_VARIABLE_LABELS, value_labels=PY_VALUE_LABELS)),
+    ]
+
+
+GOLDEN_SINGLE_SHOT = {
+    "dta_v117/chunked": "b5743ef4a98e2154ebb6a0c0e39af64ae3a43a5eaf1d3c6c657b1e22415131b0",
+    "dta_v117/empty": "2febaedee93246dad8ddf0230ec345120d1da55f99b64627cecaa603691deb09",
+    "dta_v117/longname": "ffce100412a29284ed7e954ef9b74957f93d8811b64da064d0adfd4de654929a",
+    "dta_v117/mixed": "738b07f1b2f423545f6b7ad71bb5bacfe7a737b6fef32afe44cd88dee3a79bb9",
+    "dta_v118/chunked": "2e82923a0322d546ace5dafe152011e6437590c10d4d8120e10ec102f2dc5838",
+    "dta_v118/empty": "313f8e0301ae517b3e044d15d243b8e2ab6cfa0b52ad2064eaa46f790e2d4f89",
+    "dta_v118/longname": "1880a76cd5925036cc3fa63d9b2fca70dc1465a584a07f693718c260c21d6410",
+    "dta_v118/mixed": "2b75a2fadc490ddbefcf20bb07b8e46d64046f158a32679fda8314a7373d1de8",
+    "dta_v118/strl": "dd028e65c95a3dc598865415ac8fa5085d33525c6119e820e71d4bb8b0b66636",
+    "dta_v119/chunked": "8029dbc08982504b668ce19599d61d0ba80e9b5ac65c6a1252bfc516425c8704",
+    "dta_v119/empty": "1539bb000d3ce38e15d59c98f5ef04c9b189079442ccfb1b13260e0bc6dbb61b",
+    "dta_v119/longname": "999c2aae8ea6be2930617ca917987ca1597fa9a2b04ea64201b30f918553be1b",
+    "dta_v119/mixed": "4106b6db09172be03716cc4237ea85192760fd0cb77609cf0d320af9b555cd19",
+    "dta_v119/strl": "9cfab06ca860725ffd98168b7af37079666e16bcf18703d835eed6e2dfff2a1e",
+    "por_labels/chunked": "3207a15e9d52bff4cbb6a490e35c823a81a555c9f2ca7891ac6708757d8f40a0",
+    "por_labels/empty": "6be7bfaa197a4d6f994560623f0a63b762cc7028d1eda4e122d28f02a2dbe2f6",
+    "por_labels/longname": "775f430714e016fa2f9caee77f6c9498ae0f5a0e25a6d60933d49f077a9d8517",
+    "por_labels/mixed": "fc67570fc590f9c7ae7f96f8c6b297238a9cf69b8258c8df8dd48704341f3bac",
+    "sas7bdat_plain/chunked": "bc0c16579c9cf4b2b70f99af770199cb2a7bbb8b54104f7fd2ef3dc6baa60a7a",
+    "sas7bdat_plain/empty": "d51c5cf40808a9ddf628ea3a332e0269034db23af2c4d45e18a253d828788536",
+    "sas7bdat_plain/longname": "0530caf65ccf03ded01f035b40b5c517007845d86dfbbe28bc705bfe618e012a",
+    "sas7bdat_plain/mixed": "4f4444e0f4464467330813b1d0ada41f0b348209a08bd4f21401fc91a0ff85e0",
+    "sas7bdat_rdc/chunked": "b1b21e8b7f3406854a943405009270e7fb18b40b8b18d7d366fdfe937bee7b85",
+    "sas7bdat_rdc/empty": "d51c5cf40808a9ddf628ea3a332e0269034db23af2c4d45e18a253d828788536",
+    "sas7bdat_rdc/longname": "9f94e8930e4cc0e02779ed8aa05ab8137285455c716c033b176902e94b6bb527",
+    "sas7bdat_rdc/mixed": "e796d432a03af3ef534d88bba0a3f13b1d47ad8395860f693c394f1c5021760b",
+    "sas7bdat_rle/chunked": "601116f86b2f82a2eeb410f8b4b840ea2668732a3b95198dda730e570c64e0d6",
+    "sas7bdat_rle/empty": "d51c5cf40808a9ddf628ea3a332e0269034db23af2c4d45e18a253d828788536",
+    "sas7bdat_rle/longname": "2bb876854ca57440ccf536dc51fba2d9574aeea293f494648feb427709177214",
+    "sas7bdat_rle/mixed": "5d1b6ce1492d70779603d6727c7c482399d42ce6ca3154bd239335b356f0f172",
+    "sav_big_endian/chunked": "86cc0ca3d4224782b207d8106061dc141e6e15bbda78cb1af1adb59c6fef1863",
+    "sav_big_endian/empty": "502bbe5016c677a3693cb69adc4ec81c63aa1e38af31e91e577d087e775cb6a7",
+    "sav_big_endian/longname": "60c3d23f39aeb422e84118488ff4de2d9ce611d9689ad0070f1a723b5174aa5b",
+    "sav_big_endian/mixed": "b97f958e6053a4502c6b341fe18bb774b96652e08ad46c1bf07971c252e72b7b",
+    "sav_compress/chunked": "bc6ebd22816c1f17dc699027406ae7c2c21c03c317fca6590618dbb14d6cea6c",
+    "sav_compress/empty": "af889517d8d7b29b3fdf3e4d74ddc2b9f00a70e955f083935ec24bc025fb02fe",
+    "sav_compress/longname": "e933402c63b1200905215195e17620e50b8554f71472694ca86b4022365dc51e",
+    "sav_compress/mixed": "8a18c57db527aa24c5f14ea98240abc0ae453c9838a8e49cc1e3f541e50d912f",
+    "sav_plain/chunked": "0279840fbe84b5b81780804eb3645392ab7e01fbeda9b950b870134d6ab13e18",
+    "sav_plain/empty": "e535b1b69bd205e3ee41679bb94621df9da04eb1ad63b3d5b129c5b1eb019476",
+    "sav_plain/longname": "fba67564f4290b0cf3556fec6f9c67147b7e893b1c19a3d76e0f810c4dc70afd",
+    "sav_plain/mixed": "6b125589552518e9bfdb040c01abcbf3eba8a00255428c5a2560e6ee7a4d7619",
+    "xpt_v5/chunked": "079e58eb20179e4aaa16d4b046fef3b985455a5400aaaf6ec966e4db2f2e8ebc",
+    "xpt_v5/empty": "5a91e6f0f8c0368d5948827aef1af9c85569f3dfc76398bbac707bbc8e250ed0",
+    "xpt_v5/longname": "3e18a6568a477dc869bfc82d1e3515424f9fe3ef46ab33f9e6570074b663e737",
+    "xpt_v5/mixed": "01c28ecad5753b2ff5ddf2001a5973746592fc4965025bf9101072abc427122a",
+    "xpt_v8/chunked": "b75a84f04e443be689a3b6a0051e762a58d654dbd519b2ba7f7854447498a3fe",
+    "xpt_v8/empty": "0b7bbeb9e10cd0626f83df4b747da5bfacdb478f67d3661365cc4a868863567a",
+    "xpt_v8/longname": "198ba3f879141507ff4d7164b0177500462abb55aeff7709aafea44b7ad91e29",
+    "xpt_v8/mixed": "69965413e5fd0bdc14039ddfc24523bdd018742b3ce488177af48909f4409898",
+    "zsav/chunked": "cc392a8310c3364230a70188b16ab909575506c48c8666af1685e1b4a5212fe5",
+    "zsav/empty": "4ea8202fea37db673a58a3d578686677079489d3c53754c31f18b0659c4c54dd",
+    "zsav/longname": "6a49ec7698256a8b5b6ef356a981b44e34b0139f84d0593248247788135468b9",
+    "zsav/mixed": "fbf2d5076427a9336a4ea5d1fbbb1393ed82a874a9b4aa09efab4e24f35c0e19",
+}
+
+def write_single_shot_cells(tmp_path) -> dict:
+    """Write every single-shot cell under ``tmp_path``; return {cell: sha256}."""
+    from polars_readstat_rs_spark.formats.stata.writer import write_dta
+
+    out = {}
+    tables = single_shot_tables()
+    for cell, ext, write in _single_shot_cells():
+        for name, table in tables.items():
+            path = str(tmp_path / f"{cell}-{name}.{ext}")
+            write(table, path)
+            out[f"{cell}/{name}"] = _sha(path)
+    for version in (118, 119):
+        path = str(tmp_path / f"strl-{version}.dta")
+        write_dta(strl_table(), path, value_labels=PY_VALUE_LABELS, data_label="strl", version=version)
+        out[f"dta_v{version}/strl"] = _sha(path)
+    return out
+
+
+def test_single_shot_golden_bytes(tmp_path):
+    got = write_single_shot_cells(tmp_path)
+    assert set(got) == set(GOLDEN_SINGLE_SHOT)
+    diff = {cell: got[cell] for cell in GOLDEN_SINGLE_SHOT if got[cell] != GOLDEN_SINGLE_SHOT[cell]}
+    assert not diff, diff
