@@ -4,7 +4,11 @@
   src/lib.rs:397-413): a DataFrame over the custom DataSource.
 - readstat_metadata(spark, path)     — metadata probe (reference S8,
   src/lib.rs:416-438): one row per variable with name/type/format/labels.
-- write_dta(df, path, ...)           — Stata writer (reference W1).
+- write_dta / write_sav / write_xpt / write_por / write_sas7bdat(df,
+  path, ...) — single-file writers (reference W1/W2). Each collects the
+  DataFrame to the driver and runs its format's one encoder (spill +
+  assemble, formats/single.py) on it as one section; the distributed
+  ``df.write.format("readstat")`` runs the same encoder per task.
 """
 
 from __future__ import annotations
@@ -701,9 +705,11 @@ def read_sas_catalog(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_dta(df: DataFrame, path: str, compress: bool = False, **kwargs) -> None:
-    """Write a Spark DataFrame as Stata .dta v118 (driver-side assembly;
-    use toArrow's batched transfer — fine for dimension-scale outputs,
-    use the parquet pipeline for petabyte-scale persistence).
+    """Write a Spark DataFrame as Stata .dta v118 through the .dta
+    encoder, as one section collected with toArrow — fine for
+    dimension-scale outputs; ``df.write.format("readstat")`` runs the
+    same encoder distributed, and the parquet pipeline suits
+    petabyte-scale persistence.
 
     ``compress=True`` applies the reference writer's pre-write type
     narrowing (StataWriter::with_compress, src/stata/writer.rs:176-183 +
@@ -720,25 +726,29 @@ def write_dta(df: DataFrame, path: str, compress: bool = False, **kwargs) -> Non
 
 
 def write_sav(df: DataFrame, path: str, **kwargs) -> None:
-    """Write a Spark DataFrame as an uncompressed SPSS .sav (W2)."""
+    """Write a Spark DataFrame as SPSS .sav (W2; ``compress`` True for
+    bytecode RLE, "zsav" for the zlib container) through the .sav
+    encoder, as one section collected with toArrow."""
     from .formats.spss import writer as spss_writer
 
     spss_writer.write_sav(df.toArrow(), path, **kwargs)
 
 
 def write_xpt(df: DataFrame, path: str, **kwargs) -> None:
-    """Write a Spark DataFrame as SAS Transport XPORT v5 (driver-side
-    assembly; the distributed path is df.write.format("readstat")
-    .save("x.xpt") — beyond the reference, which has no .xpt support)."""
+    """Write a Spark DataFrame as SAS Transport XPORT v5 (or v8 with
+    ``version=8``) through the .xpt encoder, as one section collected
+    with toArrow; the distributed path is df.write.format("readstat")
+    .save("x.xpt") — beyond the reference, which has no .xpt support."""
     from .formats.sas import xport
 
     xport.write_xpt(df.toArrow(), path, **kwargs)
 
 
 def write_por(df: DataFrame, path: str, **kwargs) -> None:
-    """Write a Spark DataFrame as SPSS Portable .por (driver-side
-    assembly; the distributed path is df.write.format("readstat")
-    .save("x.por") — beyond the reference, which has no .por support).
+    """Write a Spark DataFrame as SPSS Portable .por through the .por
+    encoder, as one section collected with toArrow; the distributed path
+    is df.write.format("readstat").save("x.por") — beyond the reference,
+    which has no .por support.
     Numbers are written in exact base-30 (see formats/spss/portable.py),
     so every double roundtrips bitwise through this engine."""
     from .formats.spss import portable
@@ -747,10 +757,12 @@ def write_por(df: DataFrame, path: str, **kwargs) -> None:
 
 
 def write_sas7bdat(df: DataFrame, path: str, **kwargs) -> None:
-    """Write a Spark DataFrame as a NATIVE binary .sas7bdat (64-bit LE,
-    uncompressed) — beyond the reference, whose only SAS write path is
-    CSV + a .sas load script (W3). Driver-side assembly; the
-    distributed path is df.write.format("readstat").save("x.sas7bdat").
+    """Write a Spark DataFrame as a NATIVE binary .sas7bdat (64-bit LE;
+    ``compress`` "RLE" or "RDC" for row compression) — beyond the
+    reference, whose only SAS write path is CSV + a .sas load script
+    (W3). Runs the .sas7bdat encoder on one section collected with
+    toArrow; the distributed path is
+    df.write.format("readstat").save("x.sas7bdat").
     Cross-validated against pandas.read_sas and this repo's own
     partitioned reader."""
     from .formats.sas import bdat_writer

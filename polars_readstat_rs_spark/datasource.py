@@ -1032,7 +1032,7 @@ def _codec(fmt: str, options, schema) -> _Codec:
 
         return _Codec("dta", partial(w.spill_partition, declared=widths), partial(
             w.assemble_dta, schema=arrow, value_labels=value_labels(int),
-            variable_labels=variable_labels, declared=widths,
+            variable_labels=variable_labels, declared=widths, data_label=data_label,
             # option("dta_version", "117"|"119"): pre-Stata-14 / >32k-variable output
             version=int(options.get("dta_version", "118")),
         ))

@@ -36,10 +36,12 @@ materialization.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
+from ..single import as_arrow_table, write_one_section
 from .xport import _sanitize_names
 
 _MAGIC = bytes(
@@ -471,44 +473,19 @@ def write_sas7bdat(
     compress: bool = False,
     column_formats: dict[str, str] | None = None,
 ) -> None:
-    """Single-shot writer for an Arrow table / Spark / pandas DataFrame."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    cols, data = encode_row_sections(table, string_widths, column_formats)
-    n = table.num_rows
-    sections = [("", [(0, len(data), n, cols)])] if n else []
-    import os
-    import tempfile
-
-    if not sections:
-        assemble_sas7bdat(
-            path, [],
-            dsname=dsname,
-            column_order=[(c, ch) for c, ch, _, _ in cols],
-            string_widths={c: ln for c, ch, ln, _ in cols if ch} or string_widths,
-            variable_labels=variable_labels,
-        )
-        return
-    fd, blob = tempfile.mkstemp(dir=os.path.dirname(os.path.abspath(path)) or ".")
-    try:
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        assemble_sas7bdat(
-            path,
-            [(blob, [(0, len(data), n, cols)])],
-            dsname=dsname,
-            column_order=list(table.column_names),
-            string_widths=string_widths,
-            variable_labels=variable_labels,
-            compress=compress,
-        )
-    finally:
-        try:
-            os.unlink(blob)
-        except OSError:
-            pass
+    """Write an Arrow table (or Spark/pandas DataFrame) as .sas7bdat in
+    one shot: spilled as one section, then assembled. A 0-row table
+    keeps the uncompressed meta page whatever ``compress`` says."""
+    t = as_arrow_table(table)
+    column_order = [
+        (f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in t.schema
+    ]
+    spill = partial(spill_partition, declared=string_widths, column_formats=column_formats)
+    write_one_section(t, path, spill, partial(
+        assemble_sas7bdat, dsname=dsname, column_order=column_order,
+        string_widths=string_widths, variable_labels=variable_labels,
+        compress=compress if t.num_rows else False,
+    ))
 
 
 # ------------------------------------------------------- RLE compression

@@ -8,11 +8,12 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.csv as pacsv
 
+from ..single import as_arrow_table
 
-def write_sas_package(table: pa.Table, csv_path: str, script_path: str, dataset: str = "outds",
+
+def write_sas_package(table, csv_path: str, script_path: str, dataset: str = "outds",
                       variable_labels: dict[str, str] | None = None) -> None:
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
+    table = as_arrow_table(table)
     variable_labels = variable_labels or {}
     pacsv.write_csv(table, csv_path)
 

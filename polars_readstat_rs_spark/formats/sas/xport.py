@@ -27,9 +27,11 @@ from __future__ import annotations
 import os
 import struct
 from dataclasses import dataclass, field
+from functools import partial
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from ..single import as_arrow_table, write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -455,6 +457,12 @@ def _sanitize_names(names: list[str], maxlen: int = 8) -> list[str]:
     return out
 
 
+def _long_label(short: str, name: str) -> str:
+    """A variable's label: its original name when the 8-char NAMESTR
+    name differs from it, so long names survive v5."""
+    return name if short != name else ""
+
+
 def encode_sections(
     table: pa.Table, string_widths: dict[str, int] | None = None
 ) -> tuple[list[XportVariable], bytes]:
@@ -480,9 +488,7 @@ def encode_sections(
             for i, e in enumerate(enc):
                 b = e[:width]
                 buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-            variables.append(
-                XportVariable(short, name if short != name else "", True, width, pos)
-            )
+            variables.append(XportVariable(short, _long_label(short, name), True, width, pos))
             cols.append(buf)
             pos += width
         else:
@@ -490,9 +496,7 @@ def encode_sections(
             null = np.asarray(arr.is_null())
             vals = np.asarray(arr.fill_null(0.0).to_numpy(zero_copy_only=False), dtype=np.float64)
             buf = _ieee_to_ibm(vals, null)
-            variables.append(
-                XportVariable(short, name if short != name else "", False, 8, pos)
-            )
+            variables.append(XportVariable(short, _long_label(short, name), False, 8, pos))
             cols.append(buf)
             pos += 8
     if not variables:
@@ -574,28 +578,6 @@ def write_header(
     return bytes(out)
 
 
-def write_xpt(
-    table,
-    path: str,
-    dsname: str = "DATA",
-    dslabel: str = "",
-    string_widths: dict[str, int] | None = None,
-    version: int = 5,
-) -> None:
-    """Write an Arrow table (or Spark/pandas DataFrame) as XPORT v5 or
-    (``version=8``) TS140-2 V8 with 32-char long names in LABELV8."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    variables, data = encode_sections(table, string_widths)
-    longs = _sanitize_names(list(table.column_names), 32) if version == 8 else None
-    with open(path, "wb") as f:
-        f.write(write_header(variables, dsname, dslabel, version, longs))
-        f.write(data)
-        f.write(b" " * (-len(data) % _REC))
-
-
 def spill_partition(batches, blob_path: str, declared: dict[str, int] | None = None):
     """Executor side of the distributed .xpt write: encode each Arrow
     batch to a fixed-width record section appended to ``blob_path``.
@@ -657,7 +639,7 @@ def assemble_xpt(
         shorts = _sanitize_names([n for n, _ in cols])
         for (name, is_char), short in zip(cols, shorts):
             ln = max(1, int((string_widths or {}).get(name, 1))) if is_char else 8
-            variables.append(XportVariable(short, name, is_char, ln, pos))
+            variables.append(XportVariable(short, _long_label(short, name), is_char, ln, pos))
             pos += ln
         if not variables:
             raise ValueError("cannot write an empty XPORT file with no schema")
@@ -700,9 +682,11 @@ def assemble_xpt(
                 f"(short {short!r}) which is not in the written schema"
             )
         widths[short] = max(widths[short], int(w))
+    name_of = {short: n for n, short in short_of.items()}
     variables, pos = [], 0
     for n, c, _ in first:
-        variables.append(XportVariable(n, "", c, widths[n] if c else 8, pos))
+        label = _long_label(n, name_of.get(n, n))
+        variables.append(XportVariable(n, label, c, widths[n] if c else 8, pos))
         pos += variables[-1].length
     out_len = pos
 
@@ -734,3 +718,24 @@ def assemble_xpt(
                 out.write(dst.tobytes())
             total += nrows
         out.write(b" " * (-(total * out_len) % _REC))
+
+
+def write_xpt(
+    table,
+    path: str,
+    dsname: str = "DATA",
+    dslabel: str = "",
+    string_widths: dict[str, int] | None = None,
+    version: int = 5,
+) -> None:
+    """Write an Arrow table (or Spark/pandas DataFrame) as XPORT v5 or
+    (``version=8``) TS140-2 V8 with 32-char long names in LABELV8, in
+    one shot: spilled as one section, then assembled."""
+    t = as_arrow_table(table)
+    column_order = [
+        (f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in t.schema
+    ]
+    write_one_section(t, path, partial(spill_partition, declared=string_widths), partial(
+        assemble_xpt, dsname=dsname, dslabel=dslabel, column_order=column_order,
+        string_widths=string_widths, version=version,
+    ))

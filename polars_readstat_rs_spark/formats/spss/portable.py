@@ -39,9 +39,11 @@ from __future__ import annotations
 import itertools
 from dataclasses import dataclass, field
 from fractions import Fraction
+from functools import partial
 
 from ..._lazy import lazy_import
 from ..._metacache import stat_keyed_cache
+from ..single import as_arrow_table, write_one_section
 
 # numpy/pyarrow are decode-path-only; planning workers (schema/
 # partitions) import this module for metadata and must not pay
@@ -719,16 +721,6 @@ def _write_wrapped(path: str, chunks) -> None:
             out.write(carry.ljust(_LINE, "Z") + "\n")
 
 
-def assemble_por(
-    path: str,
-    header: str,
-    case_blobs: list[str],
-) -> None:
-    """Driver commit: header + concatenated executor case streams,
-    re-wrapped to 80-character lines and 'Z'-padded."""
-    _write_wrapped(path, [header, *case_blobs])
-
-
 def spill_partition(batches, blob_path: str) -> list[dict]:
     """Executor side of the distributed write: append each Arrow batch's
     case stream to ``blob_path``. Returns ``[widths]``, the partition's
@@ -781,19 +773,10 @@ def write_por(
     variable_labels: dict[str, str] | None = None,
     value_labels: dict[str, dict] | None = None,
 ) -> None:
-    """Single-shot write of an Arrow table (or Spark/pandas DataFrame)."""
-    if hasattr(table, "toArrow"):
-        table = table.toArrow()
-    elif hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    variables = []
-    for i, f in enumerate(table.schema):
-        width = 0
-        if pa.types.is_string(f.type) or pa.types.is_large_string(f.type):
-            col = table.column(i).to_pylist()
-            width = max([len(str(v)) for v in col if v is not None] or [1])
-        variables.append(_var_of_field(f, width))
-    header = write_header(variables, variable_labels, value_labels)
-    assemble_por(path, header, [encode_cases(table)])
+    """Write an Arrow table (or Spark/pandas DataFrame) as .por in one
+    shot: spilled as one section, then assembled."""
+    t = as_arrow_table(table)
+    write_one_section(t, path, spill_partition, partial(
+        assemble_partitions, schema=t.schema, variable_labels=variable_labels,
+        value_labels=value_labels,
+    ))

@@ -18,10 +18,12 @@ Nulls -> system missing (0xFFEFFFFFFFFFFFFF) / blank strings.
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
+from ..single import as_arrow_table, write_one_section
 from .parser import SAV_MISSING, SPSS_SEC_SHIFT
 
 _MAX_STR = 255
@@ -56,9 +58,8 @@ def _short_names(names: list[str]) -> list[str]:
 
 
 class _Col:
-    def __init__(self, name: str, short: str, arr, declared_len: int | None = None):
+    def __init__(self, name: str, arr, declared_len: int | None = None):
         self.name = name
-        self.short = short
         self.arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
         t = self.arr.type
         n = len(self.arr)
@@ -132,8 +133,8 @@ from dataclasses import dataclass
 
 @dataclass
 class SavSpec:
-    """Column layout for the dictionary — no data attached, so the same
-    builder serves the eager writer and the distributed commit."""
+    """Column layout for the dictionary, decided from section metadata
+    (no data attached)."""
 
     name: str
     short: str
@@ -289,108 +290,6 @@ def _dictionary_bytes(
     return bytes(out)
 
 
-def write_sav(
-    table: pa.Table,
-    path: str,
-    value_labels: dict[str, dict[float, str]] | None = None,
-    variable_labels: dict[str, str] | None = None,
-    data_label: str = "",
-    user_missing: dict[str, list[float]] | None = None,
-    endian: str = "<",
-    compress: bool | str = False,
-) -> None:
-    """``user_missing``: up to 3 discrete user-declared missing doubles
-    per numeric column (reference W2 / F3 fixture semantics).
-    ``endian``: "<" (default) or ">" — big-endian output exists mainly to
-    exercise the reader's byte-order handling.
-    ``compress``: False = raw fixed-width records; True = bytecode RLE
-    (.sav compression=1); "zsav" = the RLE stream wrapped in zlib blocks
-    with a ztrailer index (compression=2) — smallest output, and the
-    reader still splits it block-parallel."""
-    if hasattr(table, "to_arrow"):
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-    value_labels = value_labels or {}
-    variable_labels = variable_labels or {}
-    user_missing = user_missing or {}
-
-    names = list(table.column_names)
-    shorts = _short_names(names)
-    cols = [_Col(n, s, table.column(i)) for i, (n, s) in enumerate(zip(names, shorts))]
-    nobs = table.num_rows
-
-    specs = [
-        SavSpec(c.name, s, c.is_str, c.string_len, c.width, c.fmt_code, c.seg_units)
-        for c, s in zip(cols, shorts)
-    ]
-    out = bytearray(
-        _dictionary_bytes(
-            specs, nobs, value_labels, variable_labels, data_label, user_missing, endian
-        )
-    )
-
-    # ---- data (uncompressed, fixed 8-byte segments)
-    case_size = sum(c.width for c in cols)
-    dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(cols))],
-            "formats": [endian + "f8" if not c.is_str else f"S{c.width * 8}" for c in cols],
-            "offsets": np.cumsum([0] + [c.width * 8 for c in cols[:-1]]).tolist(),
-            "itemsize": case_size * 8,
-        }
-    )
-    rec = np.zeros(nobs, dtype=dt)
-    for i, c in enumerate(cols):
-        rec[f"f{i}"] = c.data
-    if compress:
-        if endian != "<":
-            raise ValueError("compress supports little-endian output only")
-        units, codes = _unit_codes(rec, [(c.is_str, c.width) for c in cols])
-        rle = _rle_encode(units, codes)
-        if compress == "zsav":
-            # zlib-block container over the bytecode stream (the reference
-            # READS zsav but never writes it; our reader splits the result
-            # block-parallel via the ztrailer index + checkpoint recovery)
-            out[0:4] = b"$FL3"
-            struct.pack_into("<i", out, 72, 2)
-            out += _zsav_body(bytes(rle), len(out), int(100))
-        else:
-            struct.pack_into("<i", out, 72, 1)  # header: bytecode RLE
-            out += rle
-    else:
-        out += rec.tobytes()
-
-    with open(path, "wb") as f:
-        f.write(out)
-
-
-ZSAV_BLOCK_BYTES = 0x3FF000  # SPSS's standard uncompressed block size
-
-
-def _zsav_body(rle: bytes, zheader_ofs: int, bias: int,
-               block_bytes: int = ZSAV_BLOCK_BYTES) -> bytes:
-    """zheader + zlib blocks + ztrailer for an RLE bytecode stream
-    (layout per the reference reader, src/spss/data.rs:1687-1761)."""
-    import zlib
-
-    blocks = [rle[i : i + block_bytes] for i in range(0, len(rle), block_bytes)] or [b""]
-    comp = [zlib.compress(b) for b in blocks]
-    body_start = zheader_ofs + 24
-    ztrailer_ofs = body_start + sum(len(c) for c in comp)
-    out = bytearray()
-    out += struct.pack("<3Q", zheader_ofs, ztrailer_ofs, 24 + 24 * len(blocks))
-    for c in comp:
-        out += c
-    out += struct.pack("<qqii", bias, 0, block_bytes, len(blocks))
-    uofs, cofs = zheader_ofs, body_start
-    for b, c in zip(blocks, comp):
-        out += struct.pack("<qqii", uofs, cofs, len(b), len(c))
-        uofs += len(b)
-        cofs += len(c)
-    return bytes(out)
-
-
 # ------------------------------------------------- distributed write path
 #
 # Executor side encodes each Arrow batch to a record section using LOCAL
@@ -407,22 +306,12 @@ def encode_sav_section(batch, declared: dict[str, int] | None = None) -> tuple[b
     columns encode at that width (error if a value exceeds it), which
     makes the section's layout the *global* layout."""
     declared = declared or {}
-    names = batch.schema.names
     cols = [
-        _Col(n, n.upper()[:8] or f"V{i}", batch.column(i), declared_len=declared.get(n))
-        for i, (n) in enumerate(names)
+        _Col(n, batch.column(i), declared_len=declared.get(n))
+        for i, n in enumerate(batch.schema.names)
     ]
     n = batch.num_rows
-    case_size = sum(c.width for c in cols)
-    dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(cols))],
-            "formats": ["<f8" if not c.is_str else f"S{c.width * 8}" for c in cols],
-            "offsets": np.cumsum([0] + [c.width * 8 for c in cols[:-1]]).tolist(),
-            "itemsize": case_size * 8,
-        }
-    )
-    rec = np.zeros(n, dtype=dt)
+    rec = np.zeros(n, dtype=_record_dtype([(c.is_str, c.width) for c in cols]))
     for i, c in enumerate(cols):
         rec[f"f{i}"] = c.data
     meta = {
@@ -471,9 +360,9 @@ def spill_sav_partition(
                 (not c["is_str"]) or c["name"] in declared for c in meta["cols"]
             )
             if is_final and compress:
-                dt = _section_dtype(meta["cols"])
-                rec = np.frombuffer(rec_bytes, dtype=dt, count=meta["nrows"])
-                units, codes = _unit_codes(rec, [(c["is_str"], c["width"]) for c in meta["cols"]])
+                infos = [(c["is_str"], c["width"]) for c in meta["cols"]]
+                rec = np.frombuffer(rec_bytes, dtype=_record_dtype(infos), count=meta["nrows"])
+                units, codes = _unit_codes(rec, infos)
                 rec_bytes = _rle_encode(units, codes, final=False)
                 meta["rle"] = True
             meta["final"] = is_final
@@ -484,13 +373,14 @@ def spill_sav_partition(
     return sections
 
 
-def _section_dtype(cols: list[dict]) -> np.dtype:
+def _record_dtype(cols: list[tuple[bool, int]], endian: str = "<") -> np.dtype:
+    """Packed record dtype of (is_str, width in 8-byte units) columns."""
     return np.dtype(
         {
             "names": [f"f{i}" for i in range(len(cols))],
-            "formats": ["<f8" if not c["is_str"] else f"S{c['width'] * 8}" for c in cols],
-            "offsets": np.cumsum([0] + [c["width"] * 8 for c in cols[:-1]]).tolist(),
-            "itemsize": sum(c["width"] for c in cols) * 8,
+            "formats": [f"S{w * 8}" if is_str else endian + "f8" for is_str, w in cols],
+            "offsets": np.cumsum([0] + [w * 8 for _, w in cols[:-1]]).tolist(),
+            "itemsize": sum(w for _, w in cols) * 8,
         }
     )
 
@@ -505,6 +395,7 @@ def assemble_sav(
     user_missing: dict[str, list[float]] | None = None,
     compress: bool | str = False,
     declared: dict[str, int] | None = None,
+    endian: str = "<",
 ) -> None:
     """Driver side: global layout from section metadata, then stream
     every section into the final file. Sections already in the global
@@ -514,7 +405,11 @@ def assemble_sav(
     True ("bytecode" RLE, compression=1) / "zsav": the same RLE stream
     spooled to a temp file beside the output and wrapped block-by-block
     in the zlib container (compression=2) — one block of driver memory
-    at a time, so the distributed path stays dataset-size-independent."""
+    at a time, so the distributed path stays dataset-size-independent.
+    ``endian`` ">" writes big-endian uncompressed output: every section
+    is re-strided into the big-endian record layout."""
+    if compress and endian != "<":
+        raise ValueError("compress supports little-endian output only")
     value_labels = value_labels or {}
     variable_labels = variable_labels or {}
     user_missing = user_missing or {}
@@ -553,20 +448,17 @@ def assemble_sav(
             fmt = 20 if pa.types.is_date32(t) else 22 if pa.types.is_timestamp(t) else 5
             specs.append(SavSpec(f.name, shorts[i], False, 0, 1, fmt))
 
-    g_dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(specs))],
-            "formats": ["<f8" if not c.is_str else f"S{c.width * 8}" for c in specs],
-            "offsets": np.cumsum([0] + [c.width * 8 for c in specs[:-1]]).tolist(),
-            "itemsize": sum(c.width for c in specs) * 8,
-        }
-    )
     col_infos = [(c.is_str, c.width) for c in specs]
+    g_dt = _record_dtype(col_infos, endian)
     zsav = compress == "zsav"
+    # the driver encodes the last section's RLE with the EOF code in its
+    # final control group; an executor-compressed last section ends
+    # padded, so the EOF then takes a group of its own
+    eof_in_tail = bool(all_secs) and not all_secs[-1].get("rle")
     with open(path, "wb") as out:
         header = bytearray(
             _dictionary_bytes(
-                specs, nobs, value_labels, variable_labels, data_label, user_missing, "<"
+                specs, nobs, value_labels, variable_labels, data_label, user_missing, endian
             )
         )
         if compress:
@@ -590,7 +482,7 @@ def assemble_sav(
             with open(blob_path, "rb") as blob:
                 for sec in secs:
                     blob.seek(sec["rec_off"])
-                    if sec.get("rle") or (sec.get("final") and not compress):
+                    if sec.get("rle") or (sec.get("final") and not compress and endian == "<"):
                         # executor emitted the final (possibly compressed)
                         # byte stream — pure copy, bounded chunks
                         left = sec["rec_len"]
@@ -601,7 +493,7 @@ def assemble_sav(
                         continue
                     raw = blob.read(sec["rec_len"])
                     n = sec["nrows"]
-                    l_dt = _section_dtype(sec["cols"])
+                    l_dt = _record_dtype([(c["is_str"], c["width"]) for c in sec["cols"]])
                     local = np.frombuffer(raw, dtype=l_dt, count=n)
                     if l_dt == g_dt:
                         rec = local
@@ -622,11 +514,11 @@ def assemble_sav(
                             rec[fld] = np.ascontiguousarray(dst).view(f"S{gw}").reshape(n)
                     if compress:
                         units, codes = _unit_codes(rec, col_infos)
-                        sink.write(_rle_encode(units, codes, final=False))
+                        sink.write(_rle_encode(units, codes, final=eof_in_tail and sec is all_secs[-1]))
                     else:
                         sink.write(rec.tobytes())
-        if compress:
-            sink.write(bytes([252]) + bytes(7))  # single EOF group
+        if compress and not eof_in_tail:
+            sink.write(bytes([252]) + bytes(7))  # EOF group
         if zsav:
             _zsav_stream(out, spool, zheader_ofs=len(header))
             spool.close()
@@ -698,13 +590,16 @@ def _rle_encode(units: np.ndarray, codes: np.ndarray, final: bool = True) -> byt
     return out.tobytes()
 
 
+ZSAV_BLOCK_BYTES = 0x3FF000  # SPSS's standard uncompressed block size
+
+
 def _zsav_stream(out, spool, zheader_ofs: int, bias: int = 100,
                  block_bytes: int = ZSAV_BLOCK_BYTES) -> None:
-    """Streaming counterpart of :func:`_zsav_body` for the distributed
-    commit: the RLE bytecode spool is zlib-compressed one
-    ``block_bytes`` chunk at a time into ``out`` (zheader placeholder
-    patched after the block index is known), so the zsav container
-    never holds more than one block in driver memory."""
+    """zheader + zlib blocks + ztrailer (layout per the reference
+    reader, src/spss/data.rs:1687-1761) for the RLE bytecode spool,
+    compressed one ``block_bytes`` chunk at a time into ``out``
+    (zheader placeholder patched after the block index is known), so
+    the zsav container never holds more than one block in memory."""
     import zlib
 
     spool.seek(0)
@@ -729,3 +624,31 @@ def _zsav_stream(out, spool, zheader_ofs: int, bias: int = 100,
         out.write(struct.pack("<qqii", *e))
     out.seek(zheader_pos)
     out.write(struct.pack("<3Q", zheader_ofs, ztrailer_ofs, 24 + 24 * len(entries)))
+
+
+def write_sav(
+    table,
+    path: str,
+    value_labels: dict[str, dict[float, str]] | None = None,
+    variable_labels: dict[str, str] | None = None,
+    data_label: str = "",
+    user_missing: dict[str, list[float]] | None = None,
+    endian: str = "<",
+    compress: bool | str = False,
+) -> None:
+    """Write an Arrow table (or Spark/pandas DataFrame) as .sav in one
+    shot: spilled as one section, then assembled.
+    ``user_missing``: up to 3 discrete user-declared missing doubles
+    per numeric column (reference W2 / F3 fixture semantics).
+    ``endian``: "<" (default) or ">" — big-endian output exists mainly to
+    exercise the reader's byte-order handling.
+    ``compress``: False = raw fixed-width records; True = bytecode RLE
+    (.sav compression=1); "zsav" = the RLE stream wrapped in zlib blocks
+    with a ztrailer index (compression=2) — smallest output, and the
+    reader still splits it block-parallel."""
+    t = as_arrow_table(table)
+    write_one_section(t, path, spill_sav_partition, partial(
+        assemble_sav, schema=t.schema, value_labels=value_labels,
+        variable_labels=variable_labels, data_label=data_label,
+        user_missing=user_missing, compress=compress, endian=endian,
+    ))

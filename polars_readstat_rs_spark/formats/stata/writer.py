@@ -19,33 +19,35 @@ and value-label tables. Type mapping:
 Nulls become the Stata system-missing sentinels (ints: sentinel value,
 floats: the 0x7f000000 / 0x7fe0000000000000 bit patterns, strings: "").
 
-Two write paths share one streaming file writer (``DtaStreamWriter``):
+One encoder serves both write modes (reference streaming-batch mode,
+src/stata/writer.rs:244-380). ``spill_partition`` encodes Arrow batches
+to fixed-width record byte *sections* (final little-endian encodings for
+every value-independent type; provisional encodings only where the
+layout is a global property: int64 long-vs-double and string widths),
+and ``assemble_dta`` re-strides one section at a time with numpy into
+the final record layout and streams it through ``DtaStreamWriter`` — it
+never builds an Arrow table, never touches row values through Python
+objects, and holds at most one section (~batch_size rows) in memory.
+StrL GSO references are emitted section-locally and patched to global
+observation numbers with a cumulative row base, so no partition-id
+coordination is needed.
 
-- ``write_dta(table, path)`` — single-shot, whole table in memory
-  (driver-side convenience; mirrors the reference's full-df mode).
-- ``spill_partition`` + ``assemble_dta`` — the distributed
-  ``df.write.format("readstat")`` path (reference streaming-batch mode,
-  src/stata/writer.rs:244-380). Executors encode their Arrow batches to
-  fixed-width record byte *sections* (final little-endian encodings for
-  every value-independent type; provisional encodings only where the
-  layout is a global property: int64 long-vs-double and string widths),
-  and ``assemble_dta`` on the driver re-strides one section at a time
-  with numpy into the final record layout — it never builds an Arrow
-  table, never touches row values through Python objects, and holds at
-  most one section (~batch_size rows) in memory. StrL GSO references are
-  emitted section-locally and patched to global observation numbers with
-  a cumulative row base, so no partition-id coordination is needed.
+- ``df.write.format("readstat")``: executors spill, the driver (or each
+  task, for multifile) assembles.
+- ``write_dta(table, path)`` — the full-df mode: the whole table is
+  spilled as one section to a temp blob beside ``path``, then assembled.
 """
 
 from __future__ import annotations
 
-import os
 import struct
 import warnings
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
+from ..single import as_arrow_table, write_one_section
 from .parser import DAY_MS, STATA_EPOCH_OFFSET_DAYS, STATA_EPOCH_OFFSET_MS  # noqa: F401
 
 _MISS_I8 = 101
@@ -129,90 +131,49 @@ def _fixed_width_bytes(arr: pa.Array) -> tuple[np.ndarray, int]:
 
 
 class _Col:
-    def __init__(self, name: str, arr: pa.ChunkedArray):
-        self.name = name
-        self.arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    """Final encoding of one value-independent column: every type but
+    int64 and strings, whose layouts :func:`decide_layout` settles over
+    all sections."""
+
+    def __init__(self, name: str, arr: pa.Array):
         self.fmt = "%9.0g"
-        self.label_name = ""
-        t = self.arr.type
-        n = len(self.arr)
-        mask = np.zeros(n, dtype=bool)
-        if self.arr.null_count:
-            mask = ~np.asarray(self.arr.is_valid())
-        self.strl_values: list[str] | None = None
+        t = arr.type
+        mask = ~np.asarray(arr.is_valid()) if arr.null_count else np.zeros(len(arr), dtype=bool)
 
         if pa.types.is_boolean(t) or pa.types.is_int8(t):
             self.typecode, self.width = _TYPE_BYTE, 1
-            v = np.asarray(self.arr.cast(pa.int8()).fill_null(0), dtype=np.int8).copy()
+            v = np.asarray(arr.cast(pa.int8()).fill_null(0), dtype=np.int8).copy()
             v[mask] = _MISS_I8
-            self.data = v
         elif pa.types.is_int16(t):
             self.typecode, self.width = _TYPE_INT, 2
-            v = np.asarray(self.arr.fill_null(0), dtype=np.int16).copy()
+            v = np.asarray(arr.fill_null(0), dtype=np.int16).copy()
             v[mask] = _MISS_I16
-            self.data = v
         elif pa.types.is_int32(t):
             self.typecode, self.width = _TYPE_LONG, 4
-            v = np.asarray(self.arr.fill_null(0), dtype=np.int32).copy()
+            v = np.asarray(arr.fill_null(0), dtype=np.int32).copy()
             v[mask] = _MISS_I32
-            self.data = v
-        elif pa.types.is_int64(t):
-            v64 = np.asarray(self.arr.fill_null(0), dtype=np.int64)
-            if ((v64 > 2147483620) | (v64 < -2147483647)).any():
-                self.typecode, self.width = _TYPE_DOUBLE, 8
-                _warn_lossy_i64(name, int(v64.min()), int(v64.max()))
-                v = v64.astype(np.float64)
-                v.view(np.uint64)[mask] = _MISS_F64
-                self.data = v
-            else:
-                self.typecode, self.width = _TYPE_LONG, 4
-                v = v64.astype(np.int32)
-                v[mask] = _MISS_I32
-                self.data = v
         elif pa.types.is_float32(t):
             self.typecode, self.width = _TYPE_FLOAT, 4
-            v = np.asarray(self.arr.fill_null(0), dtype=np.float32).copy()
+            v = np.asarray(arr.fill_null(0), dtype=np.float32).copy()
             v.view(np.uint32)[mask] = _MISS_F32
-            self.data = v
         elif pa.types.is_float64(t):
             self.typecode, self.width = _TYPE_DOUBLE, 8
-            v = np.asarray(self.arr.fill_null(0), dtype=np.float64).copy()
+            v = np.asarray(arr.fill_null(0), dtype=np.float64).copy()
             v.view(np.uint64)[mask] = _MISS_F64
-            self.data = v
         elif pa.types.is_date32(t):
             self.typecode, self.width = _TYPE_LONG, 4
             self.fmt = "%td"
-            v = np.asarray(self.arr.cast(pa.int32()).fill_null(0), dtype=np.int32).copy()
-            v = v + STATA_EPOCH_OFFSET_DAYS
+            v = np.asarray(arr.cast(pa.int32()).fill_null(0), dtype=np.int32) + STATA_EPOCH_OFFSET_DAYS
             v[mask] = _MISS_I32
-            self.data = v
         elif pa.types.is_timestamp(t):
             self.typecode, self.width = _TYPE_DOUBLE, 8
             self.fmt = "%tc"
-            ms = np.asarray(
-                self.arr.cast(pa.timestamp("ms")).cast(pa.int64()).fill_null(0), dtype=np.int64
-            )
+            ms = np.asarray(arr.cast(pa.timestamp("ms")).cast(pa.int64()).fill_null(0), dtype=np.int64)
             v = (ms + STATA_EPOCH_OFFSET_MS).astype(np.float64)
             v.view(np.uint64)[mask] = _MISS_F64
-            self.data = v
-        elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            # route BEFORE materializing fixed-width bytes: strL columns
-            # (long or trailing-space — exactly the expensive ones) skip
-            # the full S{w} encode entirely
-            wmax = _max_byte_width(self.arr)
-            if wmax > _MAX_STR or _has_trailing_space(self.arr):
-                self.typecode, self.width = _TYPE_STRL, 8
-                self.fmt = "%9s"
-                self.strl_values = [x or "" for x in self.arr.to_pylist()]
-                self.data = None
-            else:
-                sbytes, wmax = _fixed_width_bytes(self.arr)
-                w = max(1, wmax)
-                self.typecode, self.width = w, w
-                self.fmt = f"%{min(w, 99)}s"
-                self.data = sbytes.astype(f"S{w}") if w != (wmax or 1) else sbytes
         else:
             raise ValueError(f"cannot write dtype {t} to .dta (column {name})")
+        self.data = v
 
 
 class ColSpec:
@@ -245,16 +206,20 @@ def _np_fmt_code(typecode: int, width: int) -> str:
     return f"S{width}"
 
 
-def _record_dtype(specs: list[ColSpec]) -> np.dtype:
-    widths = [c.width for c in specs]
+def _record_dtype(formats: list[str], widths: list[int]) -> np.dtype:
+    """Packed record dtype: fields f0, f1, ... at cumulative offsets."""
     return np.dtype(
         {
-            "names": [f"f{i}" for i in range(len(specs))],
-            "formats": [c.np_fmt() for c in specs],
+            "names": [f"f{i}" for i in range(len(formats))],
+            "formats": formats,
             "offsets": np.cumsum([0] + widths[:-1]).tolist(),
             "itemsize": int(sum(widths)),
         }
     )
+
+
+def _section_dtype(cols: list[dict]) -> np.dtype:
+    return _record_dtype([m["np"] for m in cols], [m["width"] for m in cols])
 
 
 def _pack_strl_ref(v: int, o: int, version: int) -> int:
@@ -457,58 +422,6 @@ class DtaStreamWriter:
         self._state = "done"
 
 
-def write_dta(
-    table: pa.Table,
-    path: str,
-    value_labels: dict[str, dict[int, str]] | None = None,
-    variable_labels: dict[str, str] | None = None,
-    data_label: str = "",
-    version: int = 118,
-) -> None:
-    """Write an Arrow table as Stata .dta (single-shot). ``version``:
-    118 (default, UTF-8, strL), 117 (pre-Stata-14 compat: 32-char
-    names, u32 row count; no strL — strings over 2045 bytes raise;
-    text content should be ASCII/latin-1-safe since v117 readers decode
-    the dictionary as cp1252), or 119 (Stata 15/16 >32k-variable
-    format: u32 variable count, u32 sortlist entries, 24+40-bit strL
-    refs)."""
-    if hasattr(table, "to_arrow"):  # pandas-free duck-typing for Spark DF
-        table = table.to_arrow()
-    elif not isinstance(table, pa.Table):
-        table = pa.Table.from_pandas(table, preserve_index=False)
-
-    cols = [_Col(n, table.column(i)) for i, n in enumerate(table.column_names)]
-    value_labels = value_labels or {}
-    variable_labels = variable_labels or {}
-    for c in cols:
-        if value_labels.get(c.name):
-            c.label_name = c.name  # label table named after the column
-
-    nvar, nobs = len(cols), table.num_rows
-    specs = [ColSpec(c.name, c.typecode, c.width, c.fmt, c.label_name) for c in cols]
-    dt = _record_dtype(specs)
-    rec = np.zeros(nobs, dtype=dt)
-    strl_heap: list[bytes] = []
-    for i, c in enumerate(cols):
-        if c.typecode == _TYPE_STRL:
-            refs = np.zeros(nobs, dtype="<u8")
-            for row, s in enumerate(c.strl_values):
-                if not s:
-                    continue
-                v, o = i + 1, row + 1
-                refs[row] = _pack_strl_ref(v, o, version)
-                strl_heap.append(_gso_entry(v, o, s.encode("utf-8") + b"\0"))
-            rec[f"f{i}"] = refs.view("V8")
-        else:
-            rec[f"f{i}"] = c.data
-
-    w = DtaStreamWriter(path, specs, nobs, value_labels, variable_labels, data_label, version=version)
-    w.begin()
-    w.write_data(rec.tobytes())
-    w.write_strls(b"".join(strl_heap))
-    w.finish()
-
-
 # ---------------------------------------------------------------------------
 # Distributed write: executor-side section encoding + driver-side assembly.
 # ---------------------------------------------------------------------------
@@ -558,9 +471,8 @@ def encode_section(
             col_metas.append(cm)
             datas.append(v)
         elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            # same early routing as _Col: decide strL from the cheap
-            # width/trailing-space passes, materialize S{w} only on the
-            # confirmed fixed-width path
+            # decide strL from the cheap width/trailing-space passes,
+            # materialize S{w} only on the confirmed fixed-width path
             wmax = _max_byte_width(arr)
             trailing = _has_trailing_space(arr)
             if trailing and f.name in declared:
@@ -608,16 +520,7 @@ def encode_section(
             )
             datas.append(c.data)
 
-    widths = [m["width"] for m in col_metas]
-    dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(col_metas))],
-            "formats": [m["np"] for m in col_metas],
-            "offsets": np.cumsum([0] + widths[:-1]).tolist(),
-            "itemsize": int(sum(widths)),
-        }
-    )
-    rec = np.zeros(n, dtype=dt)
+    rec = np.zeros(n, dtype=_section_dtype(col_metas))
     for i, d in enumerate(datas):
         rec[f"f{i}"] = d
     meta = {"nrows": n, "cols": col_metas}
@@ -653,7 +556,7 @@ def spill_partition(
 
 def _default_spec(name: str, t: pa.DataType) -> ColSpec:
     """Layout for a column with zero observed rows, from the schema."""
-    c = _Col(name, pa.array([], type=pa.string() if pa.types.is_large_string(t) else t))
+    c = _Col(name, pa.array([], type=t))
     return ColSpec(name, c.typecode, c.width, c.fmt)
 
 
@@ -717,16 +620,8 @@ def _convert_section(
     only runs when partitions disagreed on a column being a long
     string)."""
     n = sec["nrows"]
-    prov_widths = [m["width"] for m in sec["cols"]]
-    prov_dt = np.dtype(
-        {
-            "names": [f"f{i}" for i in range(len(sec["cols"]))],
-            "formats": [m["np"] for m in sec["cols"]],
-            "offsets": np.cumsum([0] + prov_widths[:-1]).tolist(),
-            "itemsize": int(sum(prov_widths)),
-        }
-    )
-    final_dt = _record_dtype(specs)
+    prov_dt = _section_dtype(sec["cols"])
+    final_dt = _record_dtype([c.np_fmt() for c in specs], [c.width for c in specs])
     blob.seek(sec["rec_off"])
     raw = blob.read(n * prov_dt.itemsize)
     view = np.frombuffer(raw, dtype=prov_dt, count=n)
@@ -798,6 +693,7 @@ def assemble_dta(
     variable_labels: dict[str, str] | None = None,
     declared: dict[str, int] | None = None,
     version: int = 118,
+    data_label: str = "",
 ) -> None:
     """Driver side of the distributed write: stream spilled sections into
     one .dta file. Holds one section in memory at a time — total dataset
@@ -811,7 +707,7 @@ def assemble_dta(
             spec.label_name = spec.name
     nobs = sum(s["nrows"] for s in all_sections)
 
-    w = DtaStreamWriter(path, specs, nobs, value_labels, variable_labels, version=version)
+    w = DtaStreamWriter(path, specs, nobs, value_labels, variable_labels, data_label, version)
     w.begin()
 
     # pass 1: records (collect promoted-GSO spill paths for pass 2)
@@ -842,3 +738,26 @@ def assemble_dta(
     for chunk in extra_gso_chunks:
         w.write_strls(chunk)
     w.finish()
+
+
+def write_dta(
+    table,
+    path: str,
+    value_labels: dict[str, dict[int, str]] | None = None,
+    variable_labels: dict[str, str] | None = None,
+    data_label: str = "",
+    version: int = 118,
+) -> None:
+    """Write an Arrow table (or Spark/pandas DataFrame) as Stata .dta in
+    one shot: spilled as one section, then assembled. ``version``:
+    118 (default, UTF-8, strL), 117 (pre-Stata-14 compat: 32-char
+    names, u32 row count; no strL — strings over 2045 bytes raise;
+    text content should be ASCII/latin-1-safe since v117 readers decode
+    the dictionary as cp1252), or 119 (Stata 15/16 >32k-variable
+    format: u32 variable count, u32 sortlist entries, 24+40-bit strL
+    refs)."""
+    t = as_arrow_table(table)
+    write_one_section(t, path, spill_partition, partial(
+        assemble_dta, schema=t.schema, value_labels=value_labels,
+        variable_labels=variable_labels, data_label=data_label, version=version,
+    ))

@@ -297,23 +297,6 @@ def ngram_jaccard_pairs(
     return _track(_jaccard_on(sh, prehashed=True).filter(F.col("jaccard") >= threshold))
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = NUM_HASHES,
-    _sh: DataFrame | None = None,
-) -> DataFrame:
-    """Per-doc MinHash signature: one sha256 per shingle, split into
-    ``num_hashes`` 8-hex-char (32-bit) chunks; h_i = lexicographic min
-    of chunk i over the doc's shingles. One hash invocation instead of
-    one per hash function — the independence between chunks of a
-    cryptographic digest is what MinHash needs."""
-    sh = _sh if _sh is not None else _shingle_table(df, id_col, text_col, n)
-    hashed = sh.select("doc", F.sha2(F.col("sh"), 256).alias("hx"))
-    aggs = [
-        F.min(F.substring("hx", 1 + 8 * i, 8)).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    return hashed.groupBy("doc").agg(*aggs)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

@@ -875,31 +875,6 @@ def _sqdist_expr(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def pair_sqdist_udf(a: str | Column, b: str | Column) -> Column:
-    """Arrow-vectorized squared L2 distance with :func:`_sqdist_expr`'s
-    exact fold order (see pair_dot_udf) — for corpus x centroid
-    assignment tables."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _sqd(sa, sb):
-        if not len(sa):
-            return pd.Series([], dtype="float64")
-        ma = np.array(sa.tolist(), dtype=np.float64)
-        mb = np.array(sb.tolist(), dtype=np.float64)
-        acc = np.zeros(len(ma), dtype=np.float64)
-        for j in range(ma.shape[1]):
-            d = ma[:, j] - mb[:, j]
-            acc += d * d
-        return pd.Series(acc)
-
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return _sqd(a, b)
-
-
 def _assign_cells(vecs: DataFrame, cents: DataFrame, vectorized: bool = False) -> DataFrame:
     """Nearest-centroid assignment (ties -> lowest cell id), MAP-ONLY.
 

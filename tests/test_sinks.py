@@ -235,6 +235,7 @@ def _var(meta, name: str):
 OPTION_CASES = [
     ("stata", "dta_version", "117", lambda m: m.version == 117),
     ("stata", "string_widths", '{"s": 20}', lambda m: _var(m, "s").width == 20),
+    ("stata", "data_label", "golden data", lambda m: m.data_label == "golden data"),
     ("spss", "user_missing", '{"v": [-99.0]}', lambda m: _var(m, "v").missing_doubles == [-99.0]),
     ("spss", "data_label", "golden data", lambda m: m.data_label.strip() == "golden data"),
     ("spss", "string_widths", '{"s": 20}', lambda m: _var(m, "s").string_len == 20),
@@ -284,6 +285,66 @@ def test_every_sink_honours_option(spark, tmp_path, sink, fmt, option, value, ch
     written = sorted(glob.glob(str(out / "part-*"))) if out.is_dir() else [str(out)]
     assert written
     assert check(_read_back(fmt, written[0])), (sink, option)
+
+
+@pytest.mark.parametrize("sink", ["batch", "multifile", "empty"])
+def test_xpt_sink_keeps_long_names_as_labels(spark, tmp_path, sink):
+    """XPORT v5 names are 8 characters; a longer column name is kept as
+    the variable's label, by every sink as by write_xpt."""
+    from polars_readstat_rs_spark.datasource import register
+    from polars_readstat_rs_spark.formats.sas import xport
+
+    register(spark)
+    df = golden_frame(spark).withColumnRenamed("v", "a_very_long_name")
+    if sink == "empty":
+        df = df.filter("false")
+    out = tmp_path / "out.xpt"
+    df.write.format("readstat").mode("overwrite").option("multifile", str(sink == "multifile")).save(str(out))
+    written = sorted(glob.glob(str(out / "part-*"))) if out.is_dir() else [str(out)]
+    assert written
+    for path in written:
+        labels = {v.name: v.label for v in xport.read_metadata(path).variables}
+        assert labels == {"K": "", "A_VERY_L": "a_very_long_name", "S": "", "G": ""}, path
+
+
+WRITERS = ["dta", "sav", "xpt", "sas7bdat", "por", "sas_package"]
+
+
+def _write_with(writer: str, data, path: str) -> list[str]:
+    """Write ``data`` with a format-level writer; return the files written."""
+    from polars_readstat_rs_spark.formats.sas import bdat_writer, xport
+    from polars_readstat_rs_spark.formats.sas import writer as sas_writer
+    from polars_readstat_rs_spark.formats.spss import portable
+    from polars_readstat_rs_spark.formats.spss import writer as spss_writer
+    from polars_readstat_rs_spark.formats.stata import writer as stata_writer
+
+    if writer == "sas_package":
+        sas_writer.write_sas_package(data, path + ".csv", path + ".sas")
+        return [path + ".csv", path + ".sas"]
+    write = {
+        "dta": stata_writer.write_dta,
+        "sav": spss_writer.write_sav,
+        "xpt": xport.write_xpt,
+        "sas7bdat": bdat_writer.write_sas7bdat,
+        "por": portable.write_por,
+    }[writer]
+    write(data, path)
+    return [path]
+
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_format_writer_accepts_spark_dataframe(spark, tmp_path, writer):
+    """Every format-level writer takes a Spark DataFrame and writes what
+    it writes for the DataFrame's Arrow table."""
+    df = golden_frame(spark)
+    got = _write_with(writer, df, str(tmp_path / f"spark.{writer}"))
+    want = _write_with(writer, df.toArrow(), str(tmp_path / f"arrow.{writer}"))
+    for a, b in zip(got, want):
+        with open(a, "rb") as fa, open(b, "rb") as fb:
+            body_a, body_b = fa.read(), fb.read()
+        if writer == "sas_package":  # the script names its own csv path
+            body_a = body_a.replace(b"spark.sas_package", b"arrow.sas_package")
+        assert body_a == body_b, a
 
 
 def _boom(target, parts):
