@@ -42,7 +42,7 @@ import numpy as np
 import pyarrow as pa
 
 from ..single import as_arrow_table, write_one_section
-from .xport import _sanitize_names
+from .xport import _sanitize_names, schema_column_order
 
 _MAGIC = bytes(
     [
@@ -477,12 +477,9 @@ def write_sas7bdat(
     one shot: spilled as one section, then assembled. A 0-row table
     keeps the uncompressed meta page whatever ``compress`` says."""
     t = as_arrow_table(table)
-    column_order = [
-        (f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in t.schema
-    ]
     spill = partial(spill_partition, declared=string_widths, column_formats=column_formats)
     write_one_section(t, path, spill, partial(
-        assemble_sas7bdat, dsname=dsname, column_order=column_order,
+        assemble_sas7bdat, dsname=dsname, column_order=schema_column_order(t.schema),
         string_widths=string_widths, variable_labels=variable_labels,
         compress=compress if t.num_rows else False,
     ))

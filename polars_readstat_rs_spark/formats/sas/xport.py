@@ -457,6 +457,12 @@ def _sanitize_names(names: list[str], maxlen: int = 8) -> list[str]:
     return out
 
 
+def schema_column_order(schema) -> list[tuple[str, bool]]:
+    """(name, is_char) per field of an Arrow schema: the ``column_order``
+    the XPORT and sas7bdat assemblers take."""
+    return [(f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in schema]
+
+
 def _long_label(short: str, name: str) -> str:
     """A variable's label: its original name when the 8-char NAMESTR
     name differs from it, so long names survive v5."""
@@ -732,10 +738,7 @@ def write_xpt(
     (``version=8``) TS140-2 V8 with 32-char long names in LABELV8, in
     one shot: spilled as one section, then assembled."""
     t = as_arrow_table(table)
-    column_order = [
-        (f.name, pa.types.is_string(f.type) or pa.types.is_large_string(f.type)) for f in t.schema
-    ]
     write_one_section(t, path, partial(spill_partition, declared=string_widths), partial(
-        assemble_xpt, dsname=dsname, dslabel=dslabel, column_order=column_order,
+        assemble_xpt, dsname=dsname, dslabel=dslabel, column_order=schema_column_order(t.schema),
         string_widths=string_widths, version=version,
     ))

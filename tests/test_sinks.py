@@ -347,6 +347,16 @@ def test_format_writer_accepts_spark_dataframe(spark, tmp_path, writer):
         assert body_a == body_b, a
 
 
+def test_single_shot_failure_leaves_no_blob(tmp_path):
+    """A write_* call that its assembler rejects (compressed big-endian
+    .sav) raises and leaves neither the output nor its temp blob."""
+    from polars_readstat_rs_spark.formats.spss.writer import write_sav
+
+    with pytest.raises(ValueError, match="little-endian"):
+        write_sav(single_shot_tables()["mixed"], str(tmp_path / "x.sav"), endian=">", compress=True)
+    assert os.listdir(tmp_path) == []
+
+
 def _boom(target, parts):
     with open(target, "wb") as f:
         f.write(b"half a file")
